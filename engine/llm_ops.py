@@ -15,7 +15,7 @@ cosine) are the small-sf correctness witnesses — their scale paths
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -126,9 +126,12 @@ def minhash_hashes(tok: DataFrame) -> DataFrame:
 
 def packed_token_sets(
     tok: DataFrame, materialize_input: bool = False
-) -> DataFrame:
-    """(doc_id, lang, mask array<long>, n_tok) — each doc's distinct
-    token set dictionary-encoded and packed into a fixed-width bitset.
+) -> tuple[DataFrame, int]:
+    """(frame, n_words): a (doc_id, lang, mask array<long>, n_tok) frame
+    — each doc's distinct token set dictionary-encoded and packed into a
+    fixed-width bitset — and that width in longs (1 on an empty corpus,
+    so downstream popcount unrolls stay well-formed while every join
+    remains empty).
 
     Set intersections then cost Σ bit_count(wordᵃ & wordᵇ) — integer ops
     in one codegen stage instead of per-pair string-set hashing. Ids are
@@ -147,17 +150,18 @@ def packed_token_sets(
     # intersection ops on a 5-language corpus — and needs no global
     # window at all (the numbering window is partitioned by lang).
     # The vocabulary is materialized once (localCheckpoint; tiny — one
-    # row per distinct (lang, token)): it is read three times below
-    # (width scalar, broadcast build, and implicitly by the planner),
-    # and each un-checkpointed read would re-run the full million-row
-    # explode+distinct lineage. With materialize_input=True the exploded
-    # (doc_id, lang, token) rows themselves are checkpointed first —
-    # worth it when producing them is expensive (char-shingle expansion:
-    # ~200 array elements per doc), since they are scanned twice (vocab
-    # build + mask build); measured 9.8 s → ~6 s on the sf0.1 shingle
-    # pack.
+    # row per distinct (lang, token)): an un-checkpointed broadcast
+    # build would re-run the full million-row explode+distinct lineage.
+    # Its max tokid (the width scalar) is observed on that same
+    # checkpoint job, not read back by a separate action. With
+    # materialize_input=True the exploded (doc_id, lang, token) rows
+    # themselves are checkpointed first — worth it when producing them
+    # is expensive (char-shingle expansion: ~200 array elements per
+    # doc), since they are scanned twice (vocab build + mask build);
+    # measured 9.8 s → ~6 s on the sf0.1 shingle pack.
     if materialize_input:
         tok = tok.localCheckpoint(eager=True)
+    obs = Observation()
     vocab = (
         tok.select("lang", "token")
         .distinct()
@@ -166,11 +170,12 @@ def packed_token_sets(
             F.row_number().over(W.partitionBy("lang").orderBy("token"))
             - F.lit(1),
         )
+        .observe(obs, F.max("tokid").alias("max_tokid"))
         .localCheckpoint(eager=True)
     )
     # tiny driver scalar (max per-language vocabulary) sizes the bitset;
-    # empty corpus → width-1 masks (nothing to pack, joins stay empty)
-    max_tokid = vocab.agg(F.max("tokid")).first()[0]
+    # empty corpus → max None → width-1 masks (joins stay empty)
+    max_tokid = obs.get["max_tokid"]
     max_vocab = (max_tokid if max_tokid is not None else 0) + 1
     n_words = (max_vocab + 63) // 64
     word_masks = (
@@ -183,7 +188,7 @@ def packed_token_sets(
             ).alias("m")
         )
     )
-    return (
+    packed = (
         word_masks.groupBy("doc_id", "lang")
         .agg(
             F.map_from_entries(F.collect_list(F.struct("w", "m"))).alias("wm"),
@@ -198,24 +203,17 @@ def packed_token_sets(
         )
         .drop("wm")
     )
-
-
-def mask_width(packed: DataFrame) -> int:
-    """Fixed bitset width (a driver scalar) of a packed_token_sets
-    frame; 1 on an empty corpus so downstream popcount unrolls stay
-    well-formed while every join remains empty."""
-    row = packed.select("mask").first()
-    return len(row[0]) if row is not None else 1
+    return packed, n_words
 
 
 def bitset_intersection(ma: str, mb: str, n_words: int | None = None) -> Column:
     """|A ∩ B| of two packed bitsets: Σ bit_count(wordᵃ & wordᵇ).
 
     With a small ``n_words`` (the fixed mask width, a driver scalar —
-    e.g. ``len(packed.select('mask').first()[0])`` on a checkpointed
-    packed set) the sum is emitted *unrolled* as ``bit_count(ma[0] &
-    mb[0]) + …`` — a flat codegen scalar expression, no lambda dispatch
-    and no intermediate array allocation per pair.
+    the second value :func:`packed_token_sets` returns) the sum is
+    emitted *unrolled* as ``bit_count(ma[0] & mb[0]) + …`` — a flat
+    codegen scalar expression, no lambda dispatch and no intermediate
+    array allocation per pair.
 
     The unroll is capped at {_UNROLL_MAX_WORDS} words: a single Add tree
     cannot be split by codegen's method splitter, so a wide unroll
@@ -383,8 +381,8 @@ def exact_jaccard_pairs(d: DataFrame, threshold: float = 0.8) -> DataFrame:
     # Materialize the packed sets once (localCheckpoint; on a cluster:
     # cache/checkpoint) — both join sides and the broadcast would
     # otherwise each recompute the explode+pack lineage.
-    packed = packed_token_sets(tok).localCheckpoint(eager=True)
-    n_words = mask_width(packed)
+    packed, n_words = packed_token_sets(tok)
+    packed = packed.localCheckpoint(eager=True)
     a = packed.select(
         F.col("doc_id").alias("doc_a"),
         "lang",

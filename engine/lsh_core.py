@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from engine.det import pround
@@ -248,7 +248,16 @@ def lsh_neardup_pairs(
     checkpoint). Explode commutes with the doc_id semi-join and the
     exploded rows are exactly the ``tok`` the caller would have passed,
     so the candidate set and output are bit-identical (differential +
-    forced-gate tests)."""
+    forced-gate tests).
+
+    Driver round-trips: the eager checkpoints, the hot-bucket census
+    ``.first()`` (the gate's runtime branch) and, only when the gate
+    trips at most HOT_CENSUS_CAP buckets, the hot-list collect. The
+    candidate count (empty-result branch) is observed on the candidate
+    checkpoint's own job and the bitset width comes back from
+    packed_token_sets — neither is a separate action."""
+    if tok is None and tok_arrays is None:
+        raise ValueError("lsh_neardup_pairs needs tok or tok_arrays")
     arrs = None
     if tok_arrays is not None:
         arrs = tok_arrays.localCheckpoint(eager=True)
@@ -398,8 +407,11 @@ def lsh_neardup_pairs(
     # joins + integer popcounts, instead of re-exploding the token table
     # three times (ta/tb/sizes) through shuffled joins. Only candidate
     # docs are packed (left-semi prune of the token rows first).
-    cand = cand.localCheckpoint(eager=True)
-    if cand.isEmpty():
+    obs = Observation()
+    cand = cand.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
+        eager=True
+    )
+    if obs.get["n"] == 0:
         return tok.sparkSession.createDataFrame(
             [], "doc_a long, doc_b long, jaccard double"
         )
@@ -418,8 +430,8 @@ def lsh_neardup_pairs(
         if arrs is not None
         else tok.join(cand_ids, "doc_id", "left_semi")
     )
-    packed = packed_token_sets(cand_tok).localCheckpoint(eager=True)
-    n_words = len(packed.select("mask").first()[0])
+    packed, n_words = packed_token_sets(cand_tok)
+    packed = packed.localCheckpoint(eager=True)
     pa = packed.select(
         F.col("doc_id").alias("doc_a"),
         F.col("mask").alias("ma"),
@@ -432,7 +444,7 @@ def lsh_neardup_pairs(
     )
     # SIZE-RATIO PRUNE before the popcount (r14): J(A,B) ≤ min(|A|,|B|) /
     # max(|A|,|B|), so J ≥ t implies the set sizes agree within factor t —
-    # a two-integer-compare filter that runs BEFORE the O(mask_width)
+    # a two-integer-compare filter that runs BEFORE the O(n_words)
     # bitset intersection. The exact_jaccard_pairs witness has always
     # carried this prune (inside its join condition); the banded path's
     # hot-bucket candidates are mostly size-mismatched S-curve false

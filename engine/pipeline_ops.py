@@ -36,7 +36,6 @@ from pyspark.sql.window import Window as W
 from engine.det import pround
 from engine.llm_ops import (
     bitset_intersection,
-    mask_width,
     nondet_zero,
     packed_token_sets,
     token_arrays,
@@ -223,10 +222,10 @@ def llm_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = ngram_witness(load(spark, sf_dir, "documents"))
     # Materialize once: both join sides + the broadcast reuse it.
-    packed = packed_token_sets(
+    packed, n_words = packed_token_sets(
         char_shingles(d), materialize_input=True
-    ).localCheckpoint(eager=True)
-    n_words = mask_width(packed)
+    )
+    packed = packed.localCheckpoint(eager=True)
     a = packed.select(
         F.col("doc_id").alias("doc_a"),
         "lang",
@@ -283,12 +282,13 @@ def llm_ngram_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     counterpart the llm_ngram_jaccard witness was missing in round 1
     (VERDICT r1 #3).
 
-    char_shingles feeds the same banding machinery as word tokens
-    (engine.scale_ops.lsh_neardup_pairs): minhash → 4×4 bands → bucket
-    join → bitset verify of candidates only. The shingle rows are
-    checkpointed once (materialize_tok — the ~200-element per-doc
-    shingle expansion is the expensive producer) and only candidate
-    docs are packed.
+    Per-doc shingle arrays (char_shingle_arrays) feed the same banding
+    machinery as word tokens (engine.lsh_core.lsh_neardup_pairs via
+    ``tok_arrays``): minhash → 4×4 bands → bucket join → bitset verify
+    of candidates only. The doc-grain ARRAYS are checkpointed once —
+    not the ~200-rows-per-doc exploded shingle rows — each consumer
+    re-explodes them in-plan, and only candidate docs are exploded and
+    packed for the verify.
     """
     d = load(spark, sf_dir, "documents")
     return lsh_neardup_pairs(

@@ -14,7 +14,7 @@ Import discipline: leaf modules only at module scope — see seeds8.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -98,66 +98,59 @@ def integer_pagerank(
     sets) against a pure-Python reference of the same recurrence —
     shapes the ⌊k/7⌋ fixture taxonomy never produces
     (tests/test_seeds21_refchecks.py)."""
-    # The dangling flag is a static node property — compute it ONCE and
-    # carry it on the rank frame, so each iteration's dangling-mass sum
-    # is a conditional aggregate over ranks instead of a separate
-    # broadcast-anti-join + aggregate job (r14: the loop used to launch
-    # TWO scalar-aggregate broadcast builds per iteration — total mass
-    # and dangling mass — each a full sequential job; fusing them into
-    # one aggregate halves the per-iteration job count, same integer
-    # arithmetic, bit-identical ranks).
-    is_dang = F.col("out_n").isNull()
-    flagged_nodes = nodes.join(
-        edges.select(F.col("child").alias("node"))
-        .groupBy("node")
-        .agg(F.count("*").alias("out_n")),
-        "node",
-        "left",
-    ).select("node", is_dang.alias("dang"))
-    ranks = flagged_nodes.select(
-        "node", F.lit(PR_SCALE // n_nodes).cast("bigint").alias("r"), "dang"
+    damp = F.expr(f"r * {PR_DAMP_NUM} div {PR_DAMP_DEN}")  # ≡ DuckDB //
+
+    def checkpoint(frame: DataFrame) -> tuple[DataFrame, int, int]:
+        # The next step's two mass scalars (total r, damped dangling
+        # mass) are observed on the eager checkpoint's own job — the CC
+        # loop's pattern — and enter that step as integer literals:
+        # Python // on these non-negative ints is exactly Spark's
+        # truncating `div`.
+        obs = Observation()
+        frame = frame.observe(
+            obs,
+            F.sum("r").alias("tot"),
+            F.sum(F.when(F.col("parent").isNull(), damp)).alias("dm"),
+        ).localCheckpoint(eager=True)
+        m = obs.get
+        return frame, m["tot"] or 0, m["dm"] or 0  # None on an empty frame
+
+    # Outdegree ≤ 1: a node's out-edge is a `parent` column on its rank
+    # row (null = dangling), so the edges lineage runs once and each
+    # step's inflow is a groupBy on the rank frame itself.
+    ranks, tot, dm = checkpoint(
+        nodes.join(
+            edges.select(F.col("child").alias("node"), "parent"),
+            "node",
+            "left",
+        ).select(
+            "node",
+            F.lit(PR_SCALE // n_nodes).cast("bigint").alias("r"),
+            "parent",
+        )
     )
-    damp = f"r * {PR_DAMP_NUM} div {PR_DAMP_DEN}"  # truncating, ≡ DuckDB //
     for _ in range(iters):
-        shares = (
-            ranks.agg(
-                F.sum("r").alias("tot"),
-                F.coalesce(
-                    F.sum(F.when(F.col("dang"), F.expr(damp))), F.lit(0)
-                ).alias("dm"),
-            )
-            .select(
-                F.expr(
-                    f"tot * {PR_DAMP_DEN - PR_DAMP_NUM} div {PR_DAMP_DEN}"
-                    f" div {n_nodes}"
-                )
-                .cast("bigint")
-                .alias("tele"),
-                F.expr(f"dm div {n_nodes}").cast("bigint").alias("dshare"),
-            )
+        share = (
+            tot * (PR_DAMP_DEN - PR_DAMP_NUM) // PR_DAMP_DEN // n_nodes
+            + dm // n_nodes
         )
         flowed = (
-            ranks.join(edges, ranks.node == edges.child)
+            ranks.filter(F.col("parent").isNotNull())
             .groupBy("parent")
-            .agg(F.sum(F.expr(damp)).alias("inflow"))
+            .agg(F.sum(damp).alias("inflow"))
             .select(F.col("parent").alias("node"), "inflow")
         )
-        ranks = (
-            flagged_nodes.join(flowed, "node", "left")
-            .crossJoin(F.broadcast(shares))
+        ranks, tot, dm = checkpoint(
+            ranks.select("node", "parent")
+            .join(flowed, "node", "left")
             .select(
                 "node",
-                (
-                    F.coalesce(F.col("inflow"), F.lit(0))
-                    + F.col("tele")
-                    + F.col("dshare")
-                )
+                (F.coalesce(F.col("inflow"), F.lit(0)) + F.lit(share))
                 .cast("bigint")
                 .alias("r"),
-                "dang",
+                "parent",
             )
         )
-        ranks = ranks.localCheckpoint(eager=False)
     return ranks.select("node", "r")
 
 

@@ -29,7 +29,7 @@ modules import) — the pattern proven by seeds5 in round 5.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -794,14 +794,16 @@ def llm_decontaminate_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         no_earlier_collision = F.when(
             F.col("band") == eb, all_differ
         ).otherwise(no_earlier_collision)
+    obs = Observation()
     cand = (
         tr.join(F.broadcast(ev), ["band", "bv", "lang"])
         .filter(no_earlier_collision)
         .select("doc_t", "doc_e")
+        .observe(obs, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
     tr_docs = d.filter(split == "train")
-    if cand.isEmpty():
+    if obs.get["n"] == 0:
         flagged = spark.createDataFrame([], "doc_t long")
     else:
         cand_ids = (
@@ -809,12 +811,12 @@ def llm_decontaminate_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionByName(cand.select(F.col("doc_e").alias("doc_id")))
             .distinct()
         )
-        packed = packed_token_sets(
+        packed, n_words = packed_token_sets(
             arrs.join(cand_ids, "doc_id", "left_semi").select(
                 "doc_id", "lang", F.explode("toks").alias("token")
             )
-        ).localCheckpoint(eager=True)
-        n_words = len(packed.select("mask").first()[0])
+        )
+        packed = packed.localCheckpoint(eager=True)
         pa = packed.select(
             F.col("doc_id").alias("doc_t"),
             F.col("mask").alias("ma"),

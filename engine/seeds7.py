@@ -602,7 +602,6 @@ def llm_containment_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from engine.llm_ops import (
         bitset_intersection,
-        mask_width,
         nondet_zero,
         packed_token_sets,
         tokens,
@@ -613,10 +612,8 @@ def llm_containment_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") < CONTAIN_WITNESS_MAX_ID)
         .select("doc_id", "lang", "text")
     )
-    packed = packed_token_sets(tokens(d, distinct=True)).localCheckpoint(
-        eager=True
-    )
-    n_words = mask_width(packed)
+    packed, n_words = packed_token_sets(tokens(d, distinct=True))
+    packed = packed.localCheckpoint(eager=True)
     t = CONTAIN_THRESHOLD
     # DOC-ENTITY semantics under duplicate keys: the oracle's sz/inter
     # group by doc_id ONLY, so a doc_id duplicated across rows (the

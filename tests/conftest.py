@@ -36,9 +36,11 @@ _CORE_TIER_FILES = {
     "test_bench_loop.py",
     "test_det_helpers.py",
     "test_differential.py",
+    "test_job_budgets.py",
     "test_lsh_hotbucket.py",
     "test_plans.py",
 }
+_DESELECTED = pytest.StashKey[int]()
 
 
 def pytest_collection_modifyitems(config, items):
@@ -55,6 +57,19 @@ def pytest_collection_modifyitems(config, items):
     if drop and keep:
         config.hook.pytest_deselected(items=drop)
         items[:] = keep
+        config.stash[_DESELECTED] = len(drop)
+
+
+def pytest_report_collectionfinish(config, start_path, items):
+    """Say at the top of the run when the core tier is active. Not
+    pytest_report_header: that runs before collection (no count yet)
+    and is suppressed by -q."""
+    n = config.stash.get(_DESELECTED, 0)
+    if n:
+        return (
+            f"core tier: {len(items)} tests selected, {n} deselected; "
+            "SPARK_GRAFT_FULL_TESTS=1 runs everything"
+        )
 
 
 @pytest.fixture(scope="session")

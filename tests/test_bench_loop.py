@@ -158,7 +158,7 @@ def test_summary_artifact_contract():
     """r15 summary-line pins (VERDICT r14 item 6): the final JSON line
     must stay parseable from the driver's ~2 KB stdout tail AND be
     unmisreadable — its per-query dict is the slowest-N subset (marked
-    by truncated_to_slowest), and geomean_sec carries the whole-suite
+    by n_reported), and geomean_sec carries the whole-suite
     per-query signal that survives the truncation."""
     import json
     import math
@@ -184,16 +184,17 @@ def test_summary_artifact_contract():
     assert full["geomean_sec"] == summary["geomean_sec"] == want_geo
     # Summary line: a strict slowest-N subset, explicitly marked.
     assert summary["n_queries"] == 300
-    n = summary["truncated_to_slowest"]
-    assert n == summary["n_reported"] == len(summary["queries"]) < 300
+    assert summary["n_reported"] == len(summary["queries"]) < 300
+    assert "truncated_to_slowest" not in summary
     cutoff = min(summary["queries"].values())
     dropped = [q for q in timings if q not in summary["queries"]]
     assert all(timings[q] <= cutoff for q in dropped), (
         "summary must keep the SLOWEST queries"
     )
-    # The line survives the driver's tail capture with room to spare.
+    # The line survives the driver's tail capture with room to spare:
+    # the truncation check bounds the line as emitted.
     line = json.dumps(summary, separators=(",", ":"))
-    assert len(line) <= 1400, f"summary line {len(line)}B > 1400B"
+    assert len(line) <= 1300, f"summary line {len(line)}B > 1300B"
     # Degenerate input: no queries -> no crash, null geomean.
     full0, summary0 = bench.build_artifacts(
         {}, sf=None, loadavg_start=None, loadavg_end=None,

@@ -1,0 +1,95 @@
+"""Always-on Spark job-count budgets for the eager driver-side chains,
+plus the edge cases of the observed scalars that replaced their
+scalar-only actions.
+
+Job counts, unlike wall seconds, do not swing with host load: the
+same tree at the same scale launches the same jobs. So these budgets
+assert on every run, next to (not instead of) the load-gated wall-clock
+pins in tests/test_perf_pins.py. Jobs are counted the way perfbench
+does: ``dagScheduler().nextJobId()`` before and after the query call
+(build only — eager checkpoints, census ``.first()``s, collects; the
+returned plan is not executed). Table schemas are read once before
+counting, so a budget covers the query's own jobs, not the one-time
+schema inference of the session catalog (engine.session.load).
+
+Measured at sf0.001 (warm catalog, shuffle_partitions=8):
+
+  * ``graph_pagerank_integer``: 59 build jobs while every step re-ran
+    the edges lineage and broadcast-joined a scalar aggregate; 21 with
+    the parent carried on each checkpointed rank row and the mass
+    scalars observed on each step's checkpoint. Budget 23.
+  * ``llm_lsh_neardup``: 25 build jobs while the verify read the
+    candidate count (``isEmpty``) and the bitset width (two
+    ``.first()``s) back as separate actions; 21 after. Budget 21.
+"""
+
+from __future__ import annotations
+
+import pytest
+
+import engine
+from engine.llm_ops import packed_token_sets, tokens
+from engine.lsh_core import lsh_neardup_pairs
+from engine.session import load
+from tests.conftest import SF_DIR
+
+BUDGETS = {
+    "graph_pagerank_integer": (23, ["part"]),
+    "llm_lsh_neardup": (21, ["documents"]),
+}
+
+
+@pytest.mark.parametrize("qid", sorted(BUDGETS))
+def test_build_job_budget(spark, qid):
+    budget, tables = BUDGETS[qid]
+    for t in tables:
+        load(spark, SF_DIR, t)
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    lo = dag.nextJobId()
+    engine.QUERIES[qid](spark, SF_DIR)
+    jobs = dag.nextJobId() - lo
+    assert jobs <= budget, f"{qid}: {jobs} build jobs > budget {budget}"
+
+
+def test_packed_token_sets_empty_corpus_width_one(spark):
+    """An empty token frame has no max tokid (the observation reads
+    None): the width falls back to 1 and the frame is empty."""
+    tok = spark.createDataFrame([], "doc_id long, lang string, token string")
+    packed, n_words = packed_token_sets(tok)
+    assert n_words == 1
+    assert packed.count() == 0
+
+
+def test_packed_token_sets_width_matches_masks(spark):
+    """The returned width is the length of every mask: 70 distinct
+    tokens in one language need ⌈70/64⌉ = 2 longs."""
+    tok = spark.createDataFrame(
+        [(i % 3, "xx", f"t{i}") for i in range(70)],
+        "doc_id long, lang string, token string",
+    )
+    packed, n_words = packed_token_sets(tok)
+    assert n_words == 2
+    assert {len(r.mask) for r in packed.collect()} == {2}
+
+
+def test_lsh_neardup_pairs_no_candidates_is_typed_empty(spark):
+    """Documents with disjoint vocabularies share no band bucket; the
+    observed candidate count is 0 and the result is the typed empty
+    pairs frame."""
+    d = spark.createDataFrame(
+        [
+            (i, "en", " ".join(f"w{i}x{k}" for k in range(12)))
+            for i in range(4)
+        ],
+        "doc_id long, lang string, text string",
+    )
+    pairs = lsh_neardup_pairs(tokens(d, distinct=True), 0.8)
+    assert pairs.schema.simpleString() == (
+        "struct<doc_a:bigint,doc_b:bigint,jaccard:double>"
+    )
+    assert pairs.collect() == []
+
+
+def test_lsh_neardup_pairs_needs_tokens():
+    with pytest.raises(ValueError, match="tok or tok_arrays"):
+        lsh_neardup_pairs(None, 0.8)

@@ -42,7 +42,7 @@ def test_bitset_intersection_matches_python_sets(spark, docs):
     tok = d.select(
         "doc_id", "lang", F.explode(F.split("text", " ")).alias("token")
     ).distinct()
-    packed = packed_token_sets(tok)
+    packed, _ = packed_token_sets(tok)
     a = packed.select(
         F.col("doc_id").alias("da"),
         F.col("mask").alias("ma"),

@@ -5,8 +5,9 @@ arbitrary small outdegree-≤1 graphs — chains, stars, all-dangling
 nodes, empty edge sets, self-parents — shapes the fixture's ⌊k/7⌋
 taxonomy never produces. The DuckDB oracle unrolls the recurrence as
 chained CTEs over that one taxonomy; this pins the distributed
-join+aggregate loop (broadcast scalars, left-join inflow, dangling
-anti-join) on every other graph shape.
+loop (a parent column on each checkpointed rank row, groupBy-parent
+inflow, mass scalars observed on each step's checkpoint) on every
+other graph shape.
 """
 
 from __future__ import annotations
