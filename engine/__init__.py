@@ -125,8 +125,8 @@ registry.resolve_oracles()
 # riders (llm_dedup_clusters / llm_dedup_survivors via dedup_labels —
 # which additionally gained the delta-frontier CC rounds), and
 # llm_dedup_recall; llm_decontaminate_lsh applies the same pattern
-# inline. The bounded two-stage hot-bucket census (stats first,
-# collect only under HOT_CENSUS_CAP, uniform salting above) changed
+# inline. The bounded two-stage hot-bucket census (stats first, a
+# capped hot-list collect, uniform salting above the cap) changed
 # lsh_neardup_pairs and _embedding_neardup_banded (llm_embedding_
 # neardup + emb_banded_recall). The −1-slack size prunes changed
 # exact_jaccard_pairs (llm_jaccard_neardup, llm_dedup_recall's exact

@@ -291,9 +291,7 @@ def llm_ngram_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     packed for the verify.
     """
     d = load(spark, sf_dir, "documents")
-    return lsh_neardup_pairs(
-        None, NGRAM_THRESHOLD, tok_arrays=char_shingle_arrays(d)
-    )
+    return lsh_neardup_pairs(char_shingle_arrays(d), NGRAM_THRESHOLD)
 
 
 def _neardup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -313,9 +311,9 @@ def _neardup_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the banding S-curve recall is part of the CHECKED contract, not
     drift."""
     d = load(spark, sf_dir, "documents")
-    pairs = lsh_neardup_pairs(
-        None, CLUSTER_THRESHOLD, tok_arrays=token_arrays(d)
-    ).select("doc_a", "doc_b")
+    pairs = lsh_neardup_pairs(token_arrays(d), CLUSTER_THRESHOLD).select(
+        "doc_a", "doc_b"
+    )
     return pairs.select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     ).unionByName(

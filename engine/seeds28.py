@@ -240,7 +240,7 @@ def emb_banded_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hot_gate=False: the eval corpus is witness-capped at 2·EMB_EVAL_CAP
     # = 500 rows, provably under any sane hot-bucket bound, and the gate
     # never changes the candidate set — skipping the census saves its
-    # one extra job (engine/scale_ops.py note).
+    # one extra job (engine.lsh_core.salted_bucket_selfjoin).
     banded = _embedding_neardup_banded(ev, dim, hot_gate=False).select(
         F.col("vec_a").alias("va"),
         F.col("vec_b").alias("vb"),

@@ -738,7 +738,12 @@ def llm_decontaminate_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the DuckDB oracle. Output is the per-language funnel a release
     pipeline records (kept/assayed/dropped).
     """
-    from engine.lsh_core import _minhash_sig, band_rows
+    from engine.lsh_core import (
+        N_BANDS,
+        _minhash_sig,
+        band_rows,
+        first_collision_guard,
+    )
     from engine.llm_ops import (
         bitset_intersection,
         nondet_zero,
@@ -772,28 +777,14 @@ def llm_decontaminate_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bv",
         F.col("abv").alias("abv_e"),
     )
-    # FIRST-COLLISION-BAND dedup (r14, the lsh_core trick): a (train,
-    # eval) pair colliding in k bands was emitted k times and collapsed
-    # by a `.distinct()` over the candidate set; both sides carry all
-    # their band hashes (abv), so the join keeps a pair only in its
-    # LOWEST colliding band and the distinct disappears. Candidate SET
-    # unchanged.
-    from functools import reduce as _py_reduce
-
-    from engine.lsh_core import N_BANDS
-
-    no_earlier_collision = F.lit(True)
-    for eb in range(1, N_BANDS):
-        all_differ = _py_reduce(
-            lambda acc, c: acc & c,
-            [
-                F.col("abv_t")[i] != F.col("abv_e")[i]
-                for i in range(eb)
-            ],
-        )
-        no_earlier_collision = F.when(
-            F.col("band") == eb, all_differ
-        ).otherwise(no_earlier_collision)
+    # First-collision-band dedup: both sides carry all their band
+    # hashes (abv), so the join keeps a (train, eval) pair only in its
+    # LOWEST colliding band — no candidate `.distinct()`.
+    no_earlier_collision = first_collision_guard(
+        F.col("band"),
+        [F.col("abv_t")[i] for i in range(N_BANDS)],
+        [F.col("abv_e")[i] for i in range(N_BANDS)],
+    )
     obs = Observation()
     cand = (
         tr.join(F.broadcast(ev), ["band", "bv", "lang"])

@@ -21,6 +21,15 @@ Measured at sf0.001 (warm catalog, shuffle_partitions=8):
   * ``llm_lsh_neardup``: 25 build jobs while the verify read the
     candidate count (``isEmpty``) and the bitset width (two
     ``.first()``s) back as separate actions; 21 after. Budget 21.
+  * ``llm_dedup_clusters`` (57) and ``emb_banded_recall`` (8): pinned
+    at their counts from before the banded self-join was shared, so a
+    census or collect job cannot creep into a not-tripped path. The
+    CC-labels memo is emptied for the count, so it is the cold cost.
+  * ``lsh_neardup_pairs`` with the hot-bucket gate forced
+    (HOT_BUCKET_ROWS = 8) on the tests/test_lsh_hotbucket.py corpus:
+    30 build jobs while the tripped gate collected the hot-bucket list
+    to the driver and broadcast it back; 23 with the per-bucket g
+    joined on as a frame. Budget 23.
 """
 
 from __future__ import annotations
@@ -28,27 +37,58 @@ from __future__ import annotations
 import pytest
 
 import engine
-from engine.llm_ops import packed_token_sets, tokens
+from engine.llm_ops import packed_token_sets, token_arrays
+import engine.lsh_core as lc
+import engine.pipeline_ops
 from engine.lsh_core import lsh_neardup_pairs
 from engine.session import load
 from tests.conftest import SF_DIR
+from tests.test_lsh_hotbucket import N_DUP, hotbucket_sf_dir  # noqa: F401
 
 BUDGETS = {
+    "emb_banded_recall": (8, ["embeddings"]),
     "graph_pagerank_integer": (23, ["part"]),
+    "llm_dedup_clusters": (57, ["documents"]),
     "llm_lsh_neardup": (21, ["documents"]),
 }
+FORCED_GATE_BUDGET = 23
+
+
+def _build_jobs(spark, build) -> int:
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    lo = dag.nextJobId()
+    build()
+    return dag.nextJobId() - lo
 
 
 @pytest.mark.parametrize("qid", sorted(BUDGETS))
-def test_build_job_budget(spark, qid):
+def test_build_job_budget(spark, qid, monkeypatch):
     budget, tables = BUDGETS[qid]
     for t in tables:
         load(spark, SF_DIR, t)
-    dag = spark.sparkContext._jsc.sc().dagScheduler()
-    lo = dag.nextJobId()
-    engine.QUERIES[qid](spark, SF_DIR)
-    jobs = dag.nextJobId() - lo
+    monkeypatch.setattr(engine.pipeline_ops, "_LABELS_MEMO", {})
+    jobs = _build_jobs(spark, lambda: engine.QUERIES[qid](spark, SF_DIR))
     assert jobs <= budget, f"{qid}: {jobs} build jobs > budget {budget}"
+
+
+def test_forced_gate_lsh_build_job_budget(
+    spark, hotbucket_sf_dir, monkeypatch  # noqa: F811
+):
+    """The tripped hot-bucket gate adds no driver collect: its build
+    jobs are the census ``.first()``, the checkpoints and their stages."""
+    docs = load(spark, hotbucket_sf_dir, "documents")
+    monkeypatch.setattr(lc, "HOT_BUCKET_ROWS", 8)
+    out = []
+    jobs = _build_jobs(
+        spark,
+        lambda: out.append(
+            lsh_neardup_pairs(tok_arrays=token_arrays(docs), threshold=0.8)
+        ),
+    )
+    assert jobs <= FORCED_GATE_BUDGET, (
+        f"forced gate: {jobs} build jobs > budget {FORCED_GATE_BUDGET}"
+    )
+    assert out[0].count() == N_DUP * (N_DUP - 1) // 2  # the gate tripped
 
 
 def test_packed_token_sets_empty_corpus_width_one(spark):
@@ -83,13 +123,9 @@ def test_lsh_neardup_pairs_no_candidates_is_typed_empty(spark):
         ],
         "doc_id long, lang string, text string",
     )
-    pairs = lsh_neardup_pairs(tokens(d, distinct=True), 0.8)
+    pairs = lsh_neardup_pairs(tok_arrays=token_arrays(d), threshold=0.8)
     assert pairs.schema.simpleString() == (
         "struct<doc_a:bigint,doc_b:bigint,jaccard:double>"
     )
     assert pairs.collect() == []
 
-
-def test_lsh_neardup_pairs_needs_tokens():
-    with pytest.raises(ValueError, match="tok or tok_arrays"):
-        lsh_neardup_pairs(None, 0.8)

@@ -90,7 +90,7 @@ def test_hot_bucket_gate_preserves_pairs_and_bounds_tasks(
     of the hot bucket is split across g² > 1 sub-buckets with a bounded
     per-sub-bucket share (no single task handles the whole clique)."""
     import engine.lsh_core as lc
-    from engine.llm_ops import tokens
+    from engine.llm_ops import token_arrays, tokens
     from engine.session import load
     from pyspark.sql import functions as F
 
@@ -100,7 +100,7 @@ def test_hot_bucket_gate_preserves_pairs_and_bounds_tasks(
     gated = {
         (r.doc_a, r.doc_b): r.jaccard
         for r in lc.lsh_neardup_pairs(
-            tokens(docs, distinct=True), 0.8, materialize_tok=True
+            tok_arrays=token_arrays(docs), threshold=0.8
         ).collect()
     }
     want = {
@@ -292,54 +292,141 @@ def test_embedding_hot_bucket_gate_preserves_pairs_and_bounds_tasks(
     assert per_key["mx"] < clique / 4  # no task holds the whole clique
 
 
-def test_census_cap_zero_uniform_salting_preserves_pairs(
-    spark, hotbucket_sf_dir, monkeypatch
+# ---------------------------------------------------------------------------
+# Several hot buckets with DIFFERENT replication g (a 60-clique and a
+# 20-clique: g = ⌈60/8⌉ = 8 and ⌈20/8⌉ = 3 under HOT_BUCKET_ROWS = 8),
+# so each bucket's salt range differs and every pair must still meet
+# in exactly one sub-bucket of its own bucket.
+# ---------------------------------------------------------------------------
+
+N_DUP_SMALL = 20
+DUP_TEXT_SMALL = "kafka stream window watermark trigger sink source state"
+
+
+def _hot_g(bucket_sizes) -> list[int]:
+    """Sorted replication factors g of the buckets hot at bound 8."""
+    return sorted(-(-n // 8) for n in bucket_sizes if n > 8)
+
+
+@pytest.fixture(scope="module")
+def two_hot_sf_dir(spark):
+    tmp = tempfile.mkdtemp(prefix="lsh_two_hot_")
+    rows = (
+        [(i, DUP_TEXT, "en", "srca", len(DUP_TEXT)) for i in range(N_DUP)]
+        + [
+            (1000 + i, DUP_TEXT_SMALL, "en", "srcb", len(DUP_TEXT_SMALL))
+            for i in range(N_DUP_SMALL)
+        ]
+        + [(i, t, "en", "srcx", len(t)) for i, t in DISTINCT_TEXTS.items()]
+    )
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    ).write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
+    yield tmp
+    shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_two_hot_buckets_distinct_g_preserve_pairs(
+    spark, two_hot_sf_dir, monkeypatch
 ):
-    """r15 (VERDICT r14 item 3): force the census OVER its transfer cap
-    (HOT_CENSUS_CAP = 0 with a tripped bound) so the uniform-salting
-    fallback runs — no per-bucket list is collected at all — and pin
-    that the pair output is bit-identical to the ungated run. Uses the
-    production tok_arrays path, so this also exercises the r15
-    doc-grain array checkpoint end-to-end under the gate."""
+    """Forced gate over two hot buckets of different sizes (g = 8 and
+    g = 3): the pair output is bit-identical to the ungated run."""
     import engine.lsh_core as lc
     from engine.llm_ops import token_arrays
     from engine.session import load
 
-    docs = load(spark, hotbucket_sf_dir, "documents")
+    docs = load(spark, two_hot_sf_dir, "documents")
+
+    def pairs():
+        return {
+            (r.doc_a, r.doc_b): r.jaccard
+            for r in lc.lsh_neardup_pairs(
+                tok_arrays=token_arrays(docs), threshold=0.8
+            ).collect()
+        }
+
+    from collections import Counter
+
+    from engine.llm_ops import tokens
+
+    sizes = Counter(
+        (r.band, r.bv, r.lang)
+        for r in lc.band_rows(lc._minhash_sig(tokens(docs, distinct=True)))
+        .select("band", "bv", "lang")
+        .collect()
+    )
+    assert _hot_g(sizes.values()) == [3] * 4 + [8] * 4  # both cliques hot
+
+    ungated = pairs()
     want = {
         (a, b): 1.0 for a in range(N_DUP) for b in range(a + 1, N_DUP)
+    } | {
+        (1000 + a, 1000 + b): 1.0
+        for a in range(N_DUP_SMALL)
+        for b in range(a + 1, N_DUP_SMALL)
     }
-
+    assert ungated == want
     monkeypatch.setattr(lc, "HOT_BUCKET_ROWS", 8)
-    monkeypatch.setattr(lc, "HOT_CENSUS_CAP", 0)
-    uniform = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in lc.lsh_neardup_pairs(
-            None, 0.8, tok_arrays=token_arrays(docs)
-        ).collect()
-    }
-    assert uniform == want, (
-        "uniform-salting fallback (census over cap) changed the pairs"
-    )
+    assert pairs() == ungated
 
 
-def test_embedding_census_cap_zero_uniform_salting_preserves_pairs(
-    spark, hot_emb, monkeypatch
+def test_embedding_two_hot_buckets_distinct_g_preserve_pairs(
+    spark, monkeypatch
 ):
-    """Same cap=0 uniform-salting pin for the embedding banded path."""
+    """The same two-clique pin for the embedding banded path: 60 copies
+    of one Hadamard row and 20 of another (orthogonal, so no cross
+    pairs); the forced gate is bit-identical to the ungated run."""
     import engine.lsh_core as lc
     from engine.scale_ops import _emb_dim, _embedding_neardup_banded
 
-    dim = _emb_dim(hot_emb)
+    rows = (
+        [(i, [float(x) for x in _HAD[0]]) for i in range(N_VEC_DUP)]
+        + [
+            (1000 + i, [float(x) for x in _HAD[1]])
+            for i in range(N_DUP_SMALL)
+        ]
+        + [(100 + k, [float(x) for x in _HAD[2 + k]]) for k in range(4)]
+    )
+    emb = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>"
+    ).localCheckpoint(eager=True)
+    dim = _emb_dim(emb)
+
+    import numpy as np
+    from collections import Counter
+    from engine.scale_ops import NEARDUP_BANDS, NEARDUP_BITS, _plane_weight
+
+    plane_mat = np.array(
+        [
+            [_plane_weight(k, d) for d in range(dim)]
+            for k in range(NEARDUP_BANDS * NEARDUP_BITS)
+        ]
+    )
+    sizes = Counter()
+    for _, vec in rows:
+        bits = np.asarray(vec) @ plane_mat.T > 0
+        for b in range(NEARDUP_BANDS):
+            seg = bits[b * NEARDUP_BITS : (b + 1) * NEARDUP_BITS]
+            bv = int((seg.astype(np.int64) << np.arange(NEARDUP_BITS)).sum())
+            sizes[b, bv] += 1
+    assert _hot_g(sizes.values()) == [3] * NEARDUP_BANDS + [8] * NEARDUP_BANDS
+
+    def pairs():
+        return {
+            (r.vec_a, r.vec_b): r.cosine
+            for r in _embedding_neardup_banded(emb, dim).collect()
+        }
+
+    ungated = pairs()
     want = {
         (a, b): 1.0
         for a in range(N_VEC_DUP)
         for b in range(a + 1, N_VEC_DUP)
+    } | {
+        (1000 + a, 1000 + b): 1.0
+        for a in range(N_DUP_SMALL)
+        for b in range(a + 1, N_DUP_SMALL)
     }
+    assert ungated == want
     monkeypatch.setattr(lc, "HOT_BUCKET_ROWS", 8)
-    monkeypatch.setattr(lc, "HOT_CENSUS_CAP", 0)
-    uniform = {
-        (r.vec_a, r.vec_b): r.cosine
-        for r in _embedding_neardup_banded(hot_emb, dim).collect()
-    }
-    assert uniform == want
+    assert pairs() == ungated
