@@ -371,11 +371,9 @@ def lsh_neardup_pairs(tok_arrays: DataFrame, threshold: float) -> DataFrame:
         return arrs.sparkSession.createDataFrame(
             [], "doc_a long, doc_b long, jaccard double"
         )
-    cand_ids = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
+    cand_ids = cand.select(
+        F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
+    ).distinct()
     # Prune to candidate docs BEFORE the explode (the doc_id semi-join
     # commutes with it): non-candidate occurrence rows are never
     # generated for the pack.

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from engine.det import pround
 from engine.registry import query
-from engine.session import load
+from engine.session import broadcast_if_fits, load
 
 PR_NODE_CAP = 200  # same derived-taxonomy population as sql_recursive_*
 PR_SCALE = 10**12  # total rank mass in integer micro-units
@@ -134,6 +134,10 @@ def integer_pagerank(
             tot * (PR_DAMP_DEN - PR_DAMP_NUM) // PR_DAMP_DEN // n_nodes
             + dm // n_nodes
         )
+        # At most n_nodes inflow rows, a bound known before the loop;
+        # past step 0 Spark's own estimate of this side is inflated
+        # (2.4 GB at sf0.1, see broadcast_if_fits) and, unhinted, the
+        # join sort-merges.
         flowed = (
             ranks.filter(F.col("parent").isNotNull())
             .groupBy("parent")
@@ -142,7 +146,7 @@ def integer_pagerank(
         )
         ranks, tot, dm = checkpoint(
             ranks.select("node", "parent")
-            .join(flowed, "node", "left")
+            .join(broadcast_if_fits(flowed, n_nodes), "node", "left")
             .select(
                 "node",
                 (F.coalesce(F.col("inflow"), F.lit(0)) + F.lit(share))
@@ -167,10 +171,13 @@ def graph_pagerank_integer(spark: SparkSession, sf_dir: str) -> DataFrame:
     across iterations and can flip near-tied ranks between engines;
     integer mass cannot. Dangling (root) mass and the teleport share
     redistribute uniformly each step. The Spark side loops 5 bounded
-    iterations of join+aggregate (each a hash join on the parent key —
-    the same Σ|frontier| argument as the CC fixpoint); the oracle
-    unrolls the SAME recurrence as 5 chained CTEs. Hub structure
-    emerges exactly: low keys collect mass from their ⌊k/7⌋ subtrees.
+    iterations, each an aggregate of the rank rows by parent and a join
+    of the ≤ n_nodes inflow rows back onto them. The join is broadcast
+    whenever the node count fits the broadcast threshold
+    (engine.session.broadcast_if_fits), so the aggregate is the step's
+    one shuffle; above it the join sort-merges. The oracle unrolls the
+    SAME recurrence as 5 chained CTEs. Hub structure emerges exactly:
+    low keys collect mass from their ⌊k/7⌋ subtrees.
     """
     part = load(spark, sf_dir, "part")
     nodes = part.filter(F.col("p_partkey") < PR_NODE_CAP).select(

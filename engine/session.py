@@ -16,6 +16,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 TABLES = (
     "region",
@@ -142,8 +143,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":
-        from pyspark.sql import functions as F
-
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.schema(_table_schema(spark, path)).parquet(path)
         ts_type = dict(df.dtypes)["ts"]
@@ -153,3 +152,25 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
     return spark.read.schema(_table_schema(spark, path)).parquet(path)
+
+
+def broadcast_if_fits(df: DataFrame, n_rows: int) -> DataFrame:
+    """``F.broadcast(df)`` when ``n_rows`` OBSERVED rows fit under the
+    session's ``spark.sql.autoBroadcastJoinThreshold`` (−1: never),
+    else ``df`` unchanged.
+
+    Spark's own size check reads the optimizer's estimate, and a
+    ``localCheckpoint`` keeps the estimate of the plan it materialized:
+    a join's estimate is the product of its inputs, so after one round
+    of an iterative join loop the frame claims astronomical sizes and
+    every later join plans a full shuffle of its other side. Iterative
+    loops already observe their exact row counts on each checkpoint's
+    own job (Shark's partial DAG execution: plan from statistics of the
+    materialized intermediate), so the size test uses that count and
+    Spark's own per-row estimate (8 bytes of row overhead plus each
+    field type's default size). Above the threshold the join plans
+    exactly as it would without this call."""
+    jspark = df.sparkSession._jsparkSession
+    limit = jspark.sessionState().conf().autoBroadcastJoinThreshold()
+    size = n_rows * (8 + df._jdf.schema().defaultSize())
+    return F.broadcast(df) if 0 <= size <= limit else df

@@ -17,14 +17,27 @@ Measured at sf0.001 (warm catalog, shuffle_partitions=8):
   * ``graph_pagerank_integer``: 59 build jobs while every step re-ran
     the edges lineage and broadcast-joined a scalar aggregate; 21 with
     the parent carried on each checkpointed rank row and the mass
-    scalars observed on each step's checkpoint. Budget 23.
+    scalars observed on each step's checkpoint. Still 21 with the
+    inflow join broadcast from its observed bound: at sf0.001 even the
+    inflated estimate fits under the threshold, so Spark broadcast it
+    unhinted. The saving (26 → 21 jobs per call) shows at sf0.1, where
+    the estimate (2.4 GB after step 0) planned a sort-merge join.
+    Budget 21.
   * ``llm_lsh_neardup``: 25 build jobs while the verify read the
     candidate count (``isEmpty``) and the bitset width (two
     ``.first()``s) back as separate actions; 21 after. Budget 21.
-  * ``llm_dedup_clusters`` (57) and ``emb_banded_recall`` (8): pinned
-    at their counts from before the banded self-join was shared, so a
-    census or collect job cannot creep into a not-tripped path. The
-    CC-labels memo is emptied for the count, so it is the cold cost.
+  * ``llm_dedup_clusters``: 57 build jobs while every connected-
+    components round after the first planned a sort-merge join that
+    shuffled all edges (the checkpointed labels carried an inflated
+    size estimate), the edge verify ran once per direction and the
+    candidate ids came from two scans; 44 with the frontier and
+    path-halving joins broadcast from observed row counts
+    (engine.session.broadcast_if_fits), one verify pass and one scan.
+    Budget 44. The CC-labels memo is emptied for the count, so it is
+    the cold cost.
+  * ``emb_banded_recall`` (8): pinned at its count from before the
+    banded self-join was shared, so a census or collect job cannot
+    creep into a not-tripped path.
   * ``lsh_neardup_pairs`` with the hot-bucket gate forced
     (HOT_BUCKET_ROWS = 8) on the tests/test_lsh_hotbucket.py corpus:
     30 build jobs while the tripped gate collected the hot-bucket list
@@ -41,17 +54,18 @@ from engine.llm_ops import packed_token_sets, token_arrays
 import engine.lsh_core as lc
 import engine.pipeline_ops
 from engine.lsh_core import lsh_neardup_pairs
-from engine.session import load
+from engine.session import broadcast_if_fits, load
 from tests.conftest import SF_DIR
 from tests.test_lsh_hotbucket import N_DUP, hotbucket_sf_dir  # noqa: F401
 
 BUDGETS = {
     "emb_banded_recall": (8, ["embeddings"]),
-    "graph_pagerank_integer": (23, ["part"]),
-    "llm_dedup_clusters": (57, ["documents"]),
+    "graph_pagerank_integer": (21, ["part"]),
+    "llm_dedup_clusters": (44, ["documents"]),
     "llm_lsh_neardup": (21, ["documents"]),
 }
 FORCED_GATE_BUDGET = 23
+BC_KEY = "spark.sql.autoBroadcastJoinThreshold"
 
 
 def _build_jobs(spark, build) -> int:
@@ -69,6 +83,48 @@ def test_build_job_budget(spark, qid, monkeypatch):
     monkeypatch.setattr(engine.pipeline_ops, "_LABELS_MEMO", {})
     jobs = _build_jobs(spark, lambda: engine.QUERIES[qid](spark, SF_DIR))
     assert jobs <= budget, f"{qid}: {jobs} build jobs > budget {budget}"
+
+
+def test_broadcast_if_fits_sizes_from_observed_rows(spark):
+    """The hint follows n_rows × (8 + Σ defaultSize) against the session
+    threshold, not the optimizer's estimate: a (long, long) row is 24
+    bytes, so 10 rows fit under 240 and 11 do not; −1 never hints."""
+    df = spark.createDataFrame([(1, 2)], "u long, v long")
+
+    def hinted(n):
+        plan = broadcast_if_fits(df, n)._jdf.queryExecution().analyzed()
+        return "strategy=broadcast" in plan.toString()
+
+    try:
+        spark.conf.set(BC_KEY, "240")
+        assert hinted(10) and not hinted(11)
+        spark.conf.set(BC_KEY, "-1")
+        assert not hinted(0)
+    finally:
+        spark.conf.unset(BC_KEY)
+
+
+def test_outputs_identical_without_broadcast(spark, monkeypatch):
+    """The observed-count broadcasts pick a join strategy, never a
+    result: with broadcasting off (threshold −1, the plan a graph too
+    large to broadcast gets) both iterative queries return the same
+    rows."""
+    monkeypatch.setattr(engine.pipeline_ops, "_LABELS_MEMO", {})
+    qids = ("graph_pagerank_integer", "llm_dedup_clusters")
+
+    def run():
+        engine.pipeline_ops._LABELS_MEMO.clear()
+        return {
+            q: sorted(engine.QUERIES[q](spark, SF_DIR).collect()) for q in qids
+        }
+
+    want = run()
+    try:
+        spark.conf.set(BC_KEY, "-1")
+        got = run()
+    finally:
+        spark.conf.unset(BC_KEY)
+    assert got == want
 
 
 def test_forced_gate_lsh_build_job_budget(

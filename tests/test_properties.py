@@ -12,6 +12,7 @@ single-token docs), not volume.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -363,6 +364,7 @@ def test_embedding_neardup_reads_spark_written_corpus_dir(spark, tmp_path):
     assert got == want
 
 
+@pytest.mark.parametrize("threshold", [None, "-1"], ids=["default", "nobc"])
 @given(
     edge_list=st.lists(
         st.tuples(st.integers(0, 9), st.integers(0, 9)), max_size=15
@@ -370,11 +372,15 @@ def test_embedding_neardup_reads_spark_written_corpus_dir(spark, tmp_path):
     n_nodes=st.integers(1, 10),
 )
 @SETTINGS
-def test_connected_components_matches_union_find(spark, edge_list, n_nodes):
+def test_connected_components_matches_union_find(
+    spark, threshold, edge_list, n_nodes
+):
     """Distributed CC (min-label propagation + path halving) == a plain
     union-find, on arbitrary small graphs incl. self-loops, duplicate
     edges, chains (worst case for propagation depth), and isolated
-    nodes."""
+    nodes. Run at the session's broadcast threshold (the observed-count
+    broadcasts) and at −1 (no hint: the sort-merge plan of a graph too
+    large to broadcast)."""
     from engine.pipeline_ops import connected_components
 
     edge_list = [(u, v) for u, v in edge_list if u < n_nodes and v < n_nodes]
@@ -399,9 +405,15 @@ def test_connected_components_matches_union_find(spark, edge_list, n_nodes):
         edges = spark.createDataFrame(sym, "u long, v long")
     else:
         edges = spark.createDataFrame([], "u long, v long")
-    got = {
-        r.u: r.label for r in connected_components(nodes, edges).collect()
-    }
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    try:
+        if threshold is not None:
+            spark.conf.set(key, threshold)
+        got = {
+            r.u: r.label for r in connected_components(nodes, edges).collect()
+        }
+    finally:
+        spark.conf.unset(key)
     assert got == want
 
 
