@@ -31,18 +31,16 @@ def reset_process_memos() -> None:
     """Clear driver-process memo caches between bench passes (VERDICT r12
     item 1). Memoized ops must pay their real cost in EVERY pass, or a
     REPS>=2 median books a cache-hit time no single-rep driver artifact
-    can reproduce (llm_dedup_clusters: 0.054 s memo-warm vs ~9-13 s cold
-    — the gap that manufactured r12's phantom 24 s regression). Clears
-    the CC-labels memo shared by llm_dedup_clusters/llm_dedup_survivors
-    and the driver-side twin of the worker corpus cache (the worker-side
-    copies key on file stats and are the storage-layer analogue of
-    broadcast warmth — every pass pays the same per-worker read pattern
-    a single-rep artifact does, so no clearing is needed there)."""
-    import engine.pipeline_ops
+    can reproduce (r12: a since-deleted CC-labels memo read 0.054 s warm
+    vs ~9-13 s cold — the gap that manufactured a phantom 24 s
+    regression). Clears the driver-side twin of the worker corpus cache
+    (the worker-side copies key on file stats and are the storage-layer
+    analogue of broadcast warmth — every pass pays the same per-worker
+    read pattern a single-rep artifact does, so no clearing is needed
+    there)."""
     import engine.scale_ops
     import engine.session
 
-    engine.pipeline_ops._LABELS_MEMO.clear()
     engine.scale_ops._NEARDUP_CORPUS.clear()
     # Metadata, not results — but cleared per pass anyway so every rep
     # pays the same first-load schema-inference cost a fresh single-rep

@@ -128,10 +128,11 @@ registry.resolve_oracles()
 # inline. The bounded two-stage hot-bucket census (stats first, a
 # capped hot-list collect, uniform salting above the cap) changed
 # lsh_neardup_pairs and _embedding_neardup_banded (llm_embedding_
-# neardup + emb_banded_recall). The −1-slack size prunes changed
-# exact_jaccard_pairs (llm_jaccard_neardup, llm_dedup_recall's exact
-# side, llm_simhash_recall's exact side), llm_ngram_jaccard, the LSH
-# verify, and the decontamination verify. llm_ngram_novelty was
+# neardup + emb_banded_recall). The −1-slack size prune changed every
+# exact Jaccard verify — since unified as llm_ops.jaccard_at_least —
+# under exact_jaccard_pairs (llm_jaccard_neardup, llm_dedup_recall's
+# exact side, llm_simhash_recall's exact side), llm_ngram_jaccard, the
+# LSH verify and the decontamination verify. llm_ngram_novelty was
 # rewritten from a whole-partition window min to map-combinable
 # aggregates plus an explode-free doc-grain denominator. The remaining
 # 38 slots recycle mechanically from the stale tail (post-r14 oracled

@@ -83,6 +83,11 @@ def cents_sql(expr: str, n: int = 2) -> str:
     return f"CAST(FLOOR(({expr}) * {10**n} + 0.5) AS BIGINT)"
 
 
+# Oracle-side UTC day number of ``events.ts`` (DuckDB): whole days
+# since the epoch, floored, so pre-epoch instants land on the earlier day.
+DAY_SQL = "CAST(FLOOR(epoch(ts) / 86400) AS BIGINT)"
+
+
 def exact_sum_sql(int_expr: str, scale: int, nd: int = 2) -> str:
     """Oracle-side twin of exact_sum: DuckDB sums BIGINT in HUGEINT
     (exact); the ROUND is rewritten portable by portable_round_sql."""

@@ -21,12 +21,10 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from engine.det import pround
 from engine.llm_ops import (
     N_MINHASH,
-    bitset_intersection,
+    jaccard_at_least,
     minhash_hashes,
-    nondet_zero,
     packed_token_sets,
 )
 
@@ -328,19 +326,12 @@ def lsh_neardup_pairs(tok_arrays: DataFrame, threshold: float) -> DataFrame:
     (r15, guide §2.3/§8: identical string payload with ~occurrence-count
     fewer row headers — measured at sf0.1: 110.3 MB → 15.1 MB on the
     shingle path, 12.5 MB → 2.2 MB on word tokens). Each consumer
-    (minhash vocabulary, signature build, verify pack) re-derives
-    occurrence rows with a cheap in-plan explode, and the verify stage
-    packs bitsets for *candidate docs only*: its semi-join prunes at DOC
-    grain BEFORE the explode, so non-candidate docs' occurrence rows
-    are never generated. At 100 TB the candidate set is orders of
-    magnitude smaller than the corpus, so packing everything would
-    dominate the whole pipeline.
+    (minhash vocabulary, signature build, :func:`verify_candidates`)
+    re-derives occurrence rows with a cheap in-plan explode.
 
     Driver round-trips: the eager checkpoints and the hot-bucket census
-    ``.first()`` (the gate's runtime branch). The candidate count
-    (empty-result branch) is observed on the candidate checkpoint's own
-    job and the bitset width comes back from packed_token_sets —
-    neither is a separate action."""
+    ``.first()`` (the gate's runtime branch); the verify adds no
+    separate action."""
     arrs = tok_arrays.localCheckpoint(eager=True)
     tok = arrs.select("doc_id", "lang", F.explode("toks").alias("token"))
     # The signature table is doc-grain (16 longs + the band hashes) and
@@ -358,72 +349,51 @@ def lsh_neardup_pairs(tok_arrays: DataFrame, threshold: float) -> DataFrame:
         ("doc_a", "doc_b"),
         N_BANDS,
     )
-    # Exact-Jaccard verify on candidates only, via the packed-bitset
-    # representation (engine.llm_ops.packed_token_sets) — two broadcast
-    # joins + integer popcounts, instead of re-exploding the token table
-    # three times (ta/tb/sizes) through shuffled joins. Only candidate
-    # docs are packed (left-semi prune of the token rows first).
+    return verify_candidates(cand, arrs, "doc_a", "doc_b", threshold)
+
+
+def verify_candidates(
+    cand: DataFrame, arrs: DataFrame, a: str, b: str, threshold: float
+) -> DataFrame:
+    """(a, b, jaccard) of the candidate pairs ``cand`` (doc-id columns
+    ``a`` and ``b``) whose exact token-set Jaccard is ≥ threshold, the
+    token sets coming from ``arrs`` (doc_id, lang, toks array<string>).
+    The exact verify of every banded near-dup path: the LSH self-join
+    (:func:`lsh_neardup_pairs`) and the train × eval decontamination
+    join (engine.seeds6).
+
+    The candidates are checkpointed once, their count observed on that
+    same job (empty → an empty result, no pack), and the bitset width
+    comes back from packed_token_sets — no separate action. Only
+    candidate docs are packed: the doc_id semi-join commutes with the
+    explode, so it prunes at DOC grain BEFORE it and non-candidate
+    occurrence rows are never generated (at 100 TB the candidate set is
+    orders of magnitude smaller than the corpus). The packed sides are
+    broadcast onto both candidate columns and verified by
+    engine.llm_ops.jaccard_at_least — no shuffled joins."""
     obs = Observation()
     cand = cand.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
         eager=True
     )
     if obs.get["n"] == 0:
-        return arrs.sparkSession.createDataFrame(
-            [], "doc_a long, doc_b long, jaccard double"
+        return cand.sparkSession.createDataFrame(
+            [], f"{a} long, {b} long, jaccard double"
         )
-    cand_ids = cand.select(
-        F.explode(F.array("doc_a", "doc_b")).alias("doc_id")
-    ).distinct()
-    # Prune to candidate docs BEFORE the explode (the doc_id semi-join
-    # commutes with it): non-candidate occurrence rows are never
-    # generated for the pack.
+    cand_ids = cand.select(F.explode(F.array(a, b)).alias("doc_id")).distinct()
     cand_tok = arrs.join(cand_ids, "doc_id", "left_semi").select(
         "doc_id", "lang", F.explode("toks").alias("token")
     )
     packed, n_words = packed_token_sets(cand_tok)
     packed = packed.localCheckpoint(eager=True)
     pa = packed.select(
-        F.col("doc_id").alias("doc_a"),
+        F.col("doc_id").alias(a),
         F.col("mask").alias("ma"),
         F.col("n_tok").alias("na"),
     )
     pb = packed.select(
-        F.col("doc_id").alias("doc_b"),
+        F.col("doc_id").alias(b),
         F.col("mask").alias("mb"),
         F.col("n_tok").alias("nb"),
     )
-    # SIZE-RATIO PRUNE before the popcount (r14): J(A,B) ≤ min(|A|,|B|) /
-    # max(|A|,|B|), so J ≥ t implies the set sizes agree within factor t —
-    # a two-integer-compare filter that runs BEFORE the O(n_words)
-    # bitset intersection. The exact_jaccard_pairs witness has always
-    # carried this prune (inside its join condition); the banded path's
-    # hot-bucket candidates are mostly size-mismatched S-curve false
-    # positives, so the prune drops ~26% of the popcount work at sf0.1
-    # (measured) with zero output change — the implication is exact, no
-    # over-threshold pair can be size-pruned.
-    inter = (
-        cand.join(F.broadcast(pa), "doc_a")
-        .join(F.broadcast(pb), "doc_b")
-        .filter(
-            # −1 slack (r15): covers double rounding at the na/nb = t
-            # boundary — see llm_ops.exact_jaccard_pairs.
-            (F.col("na") * threshold - 1 <= F.col("nb"))
-            & (F.col("nb") * threshold - 1 <= F.col("na"))
-        )
-        .select(
-            "doc_a",
-            "doc_b",
-            "na",
-            "nb",
-            (bitset_intersection("ma", "mb", n_words) + nondet_zero())
-            .alias("n_common"),
-        )
-    )
-    jac = F.col("n_common").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("n_common")
-    )
-    return inter.filter(jac >= threshold).select(
-        "doc_a", "doc_b", pround(jac, 4).alias("jaccard")
-    )
-
-
+    pairs = cand.join(F.broadcast(pa), a).join(F.broadcast(pb), b)
+    return jaccard_at_least(pairs, a, b, n_words, threshold)

@@ -28,7 +28,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.det import pround
 from engine.registry import query
 from engine.session import load
 

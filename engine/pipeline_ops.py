@@ -34,13 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from engine.det import pround
-from engine.llm_ops import (
-    bitset_intersection,
-    nondet_zero,
-    packed_token_sets,
-    token_arrays,
-    tokens,
-)
+from engine.llm_ops import all_pairs_jaccard, token_arrays
 from engine.registry import query
 from engine.lsh_core import lsh_candidate_ctes, lsh_neardup_pairs, lsh_oracle
 from engine.session import broadcast_if_fits, load
@@ -213,54 +207,19 @@ def llm_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast and the O(n²) pair space to constants, and the doc_id
     range predicate pushes to the parquet scan.
 
-    Physical plan mirrors the bitset set-similarity join: shingles are
-    dictionary-encoded and packed into fixed-width bitsets, docs pair
-    under the size-ratio prune (J ≥ t ⟹ min/max set size ≥ t), and
+    Physical plan is the shared bitset set-similarity join
+    (engine.llm_ops.all_pairs_jaccard): shingles are dictionary-encoded
+    and packed into fixed-width bitsets, docs pair under the size-ratio
+    prune (J ≥ t ⟹ min/max set size ≥ t), and
     |∩| = Σ bit_count(wᵃ & wᵇ) verifies in one codegen stage. Shingle
     vocabulary is bounded by the corpus character diversity (~10k here,
     158 bitset longs), far below the token-pair join blowup.
     """
     d = ngram_witness(load(spark, sf_dir, "documents"))
-    # Materialize once: both join sides + the broadcast reuse it.
-    packed, n_words = packed_token_sets(
-        char_shingles(d), materialize_input=True
-    )
-    packed = packed.localCheckpoint(eager=True)
-    a = packed.select(
-        F.col("doc_id").alias("doc_a"),
-        "lang",
-        F.col("mask").alias("ma"),
-        F.col("n_tok").alias("na"),
-    )
-    b = packed.select(
-        F.col("doc_id").alias("doc_b"),
-        "lang",
-        F.col("mask").alias("mb"),
-        F.col("n_tok").alias("nb"),
-    )
-    t = NGRAM_THRESHOLD
-    pairs = a.join(
-        F.broadcast(b),
-        (a["lang"] == b["lang"])
-        & (F.col("doc_a") < F.col("doc_b"))
-        # −1 slack (r15): covers double rounding at the na/nb = t
-        # boundary — see llm_ops.exact_jaccard_pairs.
-        & (F.col("na") * t - 1 <= F.col("nb"))
-        & (F.col("nb") * t - 1 <= F.col("na")),
-    ).select(
-        "doc_a",
-        "doc_b",
-        "na",
-        "nb",
-        (bitset_intersection("ma", "mb", n_words) + nondet_zero()).alias(
-            "n_common"
-        ),
-    )
-    jac = F.col("n_common").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("n_common")
-    )
-    return pairs.filter(jac >= t).select(
-        "doc_a", "doc_b", pround(jac, 4).alias("jaccard")
+    # Materialize the shingle rows once: the vocabulary and mask builds
+    # both scan them.
+    return all_pairs_jaccard(
+        char_shingles(d), NGRAM_THRESHOLD, materialize_input=True
     )
 
 
@@ -451,30 +410,16 @@ def connected_components(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     return labels.select("u", "label")
 
 
-# Process-local memo for the component labeling shared by
-# llm_dedup_clusters and llm_dedup_survivors (both run
-# connected_components over the SAME threshold-0.8 banded edge graph —
-# VERDICT r5 item 6). Keyed by (Spark applicationId, sf_dir) so a
-# restarted session can never serve a stale frame; the cached value is
-# the final localCheckpoint-ed labels frame (one (u, label) row per
-# document — already materialized, so holding the reference costs
-# nothing and reuse skips the whole edge-generation + CC iteration).
-# Each query remains standalone: a fresh process simply recomputes.
-_LABELS_MEMO: dict = {}
-
-
 def dedup_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected-component labels (u, label) of the Jaccard ≥ 0.8
-    near-dup graph over ``documents`` — memoized per (application,
-    sf_dir); see _LABELS_MEMO."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LABELS_MEMO:
-        d = load(spark, sf_dir, "documents")
-        nodes = d.select(F.col("doc_id").alias("u"))
-        _LABELS_MEMO[key] = connected_components(
-            nodes, _neardup_edges(spark, sf_dir)
-        )
-    return _LABELS_MEMO[key]
+    near-dup graph over ``documents`` — the labeling llm_dedup_clusters
+    and llm_dedup_survivors share. Computed on every call: a result is
+    a function of the table contents alone, never of what ran earlier
+    in the process (a rewritten ``documents.parquet`` gets fresh
+    labels)."""
+    d = load(spark, sf_dir, "documents")
+    nodes = d.select(F.col("doc_id").alias("u"))
+    return connected_components(nodes, _neardup_edges(spark, sf_dir))
 
 
 @query(
@@ -519,8 +464,8 @@ def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     round structure). The oracle is DuckDB's exact transitive closure
     via recursive CTE over the SAME banded candidate edges
     (lsh_candidate_ctes), so the loop must (and does) run to a true
-    fixpoint, not a fixed round count. The labeling is shared with
-    llm_dedup_survivors through the process-local dedup_labels memo.
+    fixpoint, not a fixed round count. llm_dedup_survivors computes
+    the same labeling through :func:`dedup_labels`.
     """
     labels = dedup_labels(spark, sf_dir)
     return labels.select(

@@ -28,24 +28,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from engine.det import pround
-from engine.llm_ops import (
-    N_MINHASH,
-    _dot,
-    _sq_norm,
-    cosine,
-    bitset_intersection,
-    minhash_hashes,
-    nondet_zero,
-    packed_token_sets,
-    token_arrays,
-    tokens,
-)
+from engine.llm_ops import cosine, nondet_zero, token_arrays, tokens
 from engine.registry import query
 # LSH banding core lives in the leaf module engine.lsh_core so
 # engine.pipeline_ops can share it without dragging this module's
 # registrations forward; re-exported here for compatibility.
 from engine.lsh_core import (  # noqa: F401
-    N_BANDS as N_BANDS,
     first_collision_guard,
     lsh_neardup_pairs as lsh_neardup_pairs,
     lsh_oracle as lsh_oracle,

@@ -23,16 +23,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from engine.det import pround
+from engine.det import cents_col, cents_sql, pround
 from engine.registry import query
 from engine.session import load
 
-
-def _cents(col: str = "value") -> F.Column:
-    return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("bigint")
-
-
-_CENTS_SQL = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
 
 EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 ATTR_WINDOW_S = 3600
@@ -91,11 +85,11 @@ def sql_pivot_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH w AS (
       SELECT
-        CAST(SUM(CASE WHEN event_type = 'click' THEN {_CENTS_SQL}
+        CAST(SUM(CASE WHEN event_type = 'click' THEN {cents_sql("value")}
                  ELSE 0 END) AS BIGINT) AS click,
-        CAST(SUM(CASE WHEN event_type = 'view' THEN {_CENTS_SQL}
+        CAST(SUM(CASE WHEN event_type = 'view' THEN {cents_sql("value")}
                  ELSE 0 END) AS BIGINT) AS view,
-        CAST(SUM(CASE WHEN event_type = 'purchase' THEN {_CENTS_SQL}
+        CAST(SUM(CASE WHEN event_type = 'purchase' THEN {cents_sql("value")}
                  ELSE 0 END) AS BIGINT) AS purchase
       FROM events
     )
@@ -130,11 +124,11 @@ def sql_unpivot_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"""
         WITH wide AS (
           SELECT
-            CAST(SUM(CASE WHEN event_type = 'click' THEN {_CENTS_SQL}
+            CAST(SUM(CASE WHEN event_type = 'click' THEN {cents_sql("value")}
                      ELSE 0 END) AS BIGINT) AS click,
-            CAST(SUM(CASE WHEN event_type = 'view' THEN {_CENTS_SQL}
+            CAST(SUM(CASE WHEN event_type = 'view' THEN {cents_sql("value")}
                      ELSE 0 END) AS BIGINT) AS view,
-            CAST(SUM(CASE WHEN event_type = 'purchase' THEN {_CENTS_SQL}
+            CAST(SUM(CASE WHEN event_type = 'purchase' THEN {cents_sql("value")}
                      ELSE 0 END) AS BIGINT) AS purchase
           FROM upv_events
         )
@@ -204,7 +198,7 @@ _GBALL_SQL = f"""
     SELECT event_type,
            CAST(EXTRACT(hour FROM ts) AS INT) AS hr,
            CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM({_CENTS_SQL}) AS BIGINT) AS cents
+           CAST(SUM({cents_sql("value")}) AS BIGINT) AS cents
     FROM events
     GROUP BY ALL
     ORDER BY ALL
@@ -237,7 +231,7 @@ def sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT event_type,
            CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM({_CENTS_SQL}) AS BIGINT) AS cents
+           CAST(SUM({cents_sql("value")}) AS BIGINT) AS cents
     FROM events GROUP BY 1
     """,
 )
@@ -276,7 +270,7 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             back.groupBy("event_type")
             .agg(
                 F.count("*").alias("n"),
-                F.sum(_cents()).alias("cents"),
+                F.sum(cents_col(F.col("value"))).alias("cents"),
             )
             .select(
                 "event_type",
@@ -321,7 +315,7 @@ def sink_codec_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load(spark, sf_dir, "events")
     base = e.agg(
-        F.count("*").alias("n"), F.sum(_cents()).alias("s")
+        F.count("*").alias("n"), F.sum(cents_col(F.col("value"))).alias("s")
     ).collect()[0]
     tmp = Path(tempfile.mkdtemp(prefix="codec_"))
     rows = []
@@ -333,7 +327,7 @@ def sink_codec_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             back = spark.read.parquet(str(path))
             chk = back.agg(
-                F.count("*").alias("n"), F.sum(_cents()).alias("s")
+                F.count("*").alias("n"), F.sum(cents_col(F.col("value"))).alias("s")
             ).collect()[0]
             ok = int(chk["n"] == base["n"] and chk["s"] == base["s"])
             rows.append((codec, chk["n"], ok))
@@ -353,7 +347,7 @@ def sink_codec_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_attribution_linear",
     oracle=f"""
     WITH e AS (
-      SELECT user_id, event_type, {_CENTS_SQL} AS c,
+      SELECT user_id, event_type, {cents_sql("value")} AS c,
              CAST(FLOOR(epoch(ts)) AS BIGINT) AS sec, ts, event_id
       FROM events
     ), p AS (
@@ -393,7 +387,7 @@ def events_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").select(
         "user_id",
         "event_type",
-        _cents().alias("c"),
+        cents_col(F.col("value")).alias("c"),
         F.unix_timestamp("ts").cast("bigint").alias("sec"),
     )
     w = (
@@ -512,7 +506,7 @@ def mm_embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH d AS (
       SELECT user_id,
              CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS day,
-             (MAX({{'ts': ts, 'id': event_id, 'c': {_CENTS_SQL}}})).c
+             (MAX({{'ts': ts, 'id': event_id, 'c': {cents_sql("value")}}})).c
                AS close_c
       FROM events GROUP BY 1, 2
     )
@@ -540,7 +534,7 @@ def win_nth_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select(
             "user_id",
             F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day"),
-            _cents().alias("c"),
+            cents_col(F.col("value")).alias("c"),
             "ts",
             "event_id",
         )

@@ -19,17 +19,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from engine.det import pround
+from engine.det import DAY_SQL, cents_col, cents_sql, pround
 from engine.registry import query
 from engine.session import load
 
-
-def _cents(col: str = "value") -> F.Column:
-    return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("bigint")
-
-
-_CENTS_SQL = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
-_DAY_SQL = "CAST(FLOOR(epoch(ts) / 86400) AS BIGINT)"
 
 AUTOCORR_LAGS = (1, 7)
 
@@ -45,8 +38,8 @@ def _autocorr_oracle() -> str:
     )
     return f"""
     WITH d AS (
-      SELECT event_type, {_DAY_SQL} AS day,
-             CAST(SUM({_CENTS_SQL}) AS BIGINT) AS v
+      SELECT event_type, {DAY_SQL} AS day,
+             CAST(SUM({cents_sql("value")}) AS BIGINT) AS v
       FROM events GROUP BY 1, 2
     ), lags AS ({lag_selects}),
     p AS (
@@ -94,7 +87,7 @@ def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     d = (
         e.select("event_type", F.floor(F.unix_timestamp("ts") / 86400)
-                 .cast("bigint").alias("day"), _cents().alias("c"))
+                 .cast("bigint").alias("day"), cents_col(F.col("value")).alias("c"))
         .groupBy("event_type", "day")
         .agg(F.sum("c").alias("v"))
     )
@@ -157,8 +150,8 @@ def autocorr_core(d: DataFrame, lag_ks=AUTOCORR_LAGS) -> DataFrame:
     "ts_cusum_change",
     oracle=f"""
     WITH d AS (
-      SELECT event_type, {_DAY_SQL} AS day,
-             CAST(SUM({_CENTS_SQL}) AS BIGINT) AS v
+      SELECT event_type, {DAY_SQL} AS day,
+             CAST(SUM({cents_sql("value")}) AS BIGINT) AS v
       FROM events GROUP BY 1, 2
     ), g AS (
       SELECT event_type,
@@ -199,7 +192,7 @@ def ts_cusum_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     d = (
         e.select("event_type", F.floor(F.unix_timestamp("ts") / 86400)
-                 .cast("bigint").alias("day"), _cents().alias("c"))
+                 .cast("bigint").alias("day"), cents_col(F.col("value")).alias("c"))
         .groupBy("event_type", "day")
         .agg(F.sum("c").alias("v"))
     )

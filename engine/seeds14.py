@@ -17,15 +17,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from engine.det import cents_col, cents_sql
 from engine.registry import query
 from engine.session import load
 
-
-def _cents(col: str = "value") -> F.Column:
-    return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("bigint")
-
-
-_CENTS_SQL = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
 
 PARAM_TYPE = "purchase"
 PARAM_MIN_VALUE = 50.0
@@ -83,7 +78,7 @@ def fn_variant_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT event_type,
            CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM({_CENTS_SQL}) AS BIGINT) AS cents
+           CAST(SUM({cents_sql("value")}) AS BIGINT) AS cents
     FROM events
     WHERE event_type = '{PARAM_TYPE}' AND value >= {PARAM_MIN_VALUE!r}
     GROUP BY 1
@@ -127,7 +122,7 @@ def sql_named_parameters(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT 'n_rows' AS metric, CAST(COUNT(*) AS BIGINT) AS value
     FROM events
     UNION ALL
-    SELECT 'cents_total', CAST(COALESCE(SUM({_CENTS_SQL}), 0) AS BIGINT)
+    SELECT 'cents_total', CAST(COALESCE(SUM({cents_sql("value")}), 0) AS BIGINT)
     FROM events
     UNION ALL
     SELECT 'n_purchases',
@@ -155,7 +150,7 @@ def df_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     observed = e.observe(
         obs,
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(_cents()).alias("cents_total"),
+        F.sum(cents_col(F.col("value"))).alias("cents_total"),
         F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias(
             "n_purchases"
         ),
@@ -182,7 +177,7 @@ def df_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT event_type,
            CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM({_CENTS_SQL}) AS BIGINT) AS cents
+           CAST(SUM({cents_sql("value")}) AS BIGINT) AS cents
     FROM events GROUP BY 1
     """,
 )
@@ -201,7 +196,7 @@ def maint_cache_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import uuid
 
-    e = load(spark, sf_dir, "events").select("event_type", _cents().alias("c"))
+    e = load(spark, sf_dir, "events").select("event_type", cents_col(F.col("value")).alias("c"))
     name = f"cache_t_{uuid.uuid4().hex[:8]}"
     e.createOrReplaceTempView(name)
     try:

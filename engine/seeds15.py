@@ -21,17 +21,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from engine.det import pround
+from engine.det import DAY_SQL, cents_col, cents_sql
 from engine.registry import query
 from engine.session import load
 
-
-def _cents(col: str = "value") -> F.Column:
-    return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("bigint")
-
-
-_CENTS_SQL = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
-_DAY_SQL = "CAST(FLOOR(epoch(ts) / 86400) AS BIGINT)"
 
 PRUNE_YEAR = 1996
 
@@ -45,8 +38,8 @@ PRUNE_YEAR = 1996
     "ts_peak_days",
     oracle=f"""
     WITH d AS (
-      SELECT event_type, {_DAY_SQL} AS day,
-             CAST(SUM({_CENTS_SQL}) AS BIGINT) AS v
+      SELECT event_type, {DAY_SQL} AS day,
+             CAST(SUM({cents_sql("value")}) AS BIGINT) AS v
       FROM events GROUP BY 1, 2
     ), l AS (
       SELECT event_type, day, v,
@@ -82,7 +75,7 @@ def ts_peak_days(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select(
             "event_type",
             F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day"),
-            _cents().alias("c"),
+            cents_col(F.col("value")).alias("c"),
         )
         .groupBy("event_type", "day")
         .agg(F.sum("c").alias("v"))
@@ -189,7 +182,7 @@ def llm_survivor_policy_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(GROUPING(event_type) * 2 + GROUPING(EXTRACT(hour FROM ts))
                 AS INT) AS gid,
            CAST(COUNT(*) AS BIGINT) AS n,
-           CAST(SUM({_CENTS_SQL}) AS BIGINT) AS cents
+           CAST(SUM({cents_sql("value")}) AS BIGINT) AS cents
     FROM events
     GROUP BY ROLLUP(event_type, EXTRACT(hour FROM ts))
     HAVING COUNT(*) > 0  -- empty-input semantics, see agg_rollup
@@ -209,7 +202,7 @@ def agg_grouping_id_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     hr = F.hour("ts").cast("int")
     return (
-        e.select("event_type", hr.alias("hr"), _cents().alias("c"))
+        e.select("event_type", hr.alias("hr"), cents_col(F.col("value")).alias("c"))
         .rollup("event_type", "hr")
         .agg(
             F.grouping_id().cast("int").alias("gid"),
@@ -229,7 +222,7 @@ def agg_grouping_id_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fn_inline_stack",
     oracle=f"""
     WITH base AS (
-      SELECT event_id, event_type, {_CENTS_SQL} AS c FROM events
+      SELECT event_id, event_type, {cents_sql("value")} AS c FROM events
     )
     SELECT event_id, 'gross' AS measure, CAST(c AS BIGINT) AS val
     FROM base
@@ -253,7 +246,7 @@ def fn_inline_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's formulation would triple).
     """
     e = load(spark, sf_dir, "events")
-    c = _cents()
+    c = cents_col(F.col("value"))
     stacked = F.expr(
         "stack(3, 'gross', c, 'net', c - c div 10, 'fee', c div 10) "
         "AS (measure, val)"
@@ -273,8 +266,8 @@ def fn_inline_stack(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "sql_distribute_sort_by",
     oracle=f"""
-    SELECT user_id, {_DAY_SQL} AS day,
-           CAST(SUM({_CENTS_SQL}) AS BIGINT) AS cents
+    SELECT user_id, {DAY_SQL} AS day,
+           CAST(SUM({cents_sql("value")}) AS BIGINT) AS cents
     FROM events GROUP BY 1, 2
     """,
 )

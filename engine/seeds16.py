@@ -17,17 +17,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from engine.det import pround
+from engine.det import DAY_SQL, cents_col, cents_sql, pround
 from engine.registry import query
 from engine.session import load
 
-
-def _cents(col: str = "value") -> F.Column:
-    return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("bigint")
-
-
-_CENTS_SQL = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
-_DAY_SQL = "CAST(FLOOR(epoch(ts) / 86400) AS BIGINT)"
 
 WAU_DAYS = 7
 
@@ -41,7 +34,7 @@ WAU_DAYS = 7
     "events_new_vs_returning",
     oracle=f"""
     WITH ud AS (
-      SELECT DISTINCT user_id, {_DAY_SQL} AS day FROM events
+      SELECT DISTINCT user_id, {DAY_SQL} AS day FROM events
       WHERE user_id IS NOT NULL
     ), first_seen AS (
       SELECT user_id, MIN(day) AS d0 FROM ud GROUP BY 1
@@ -98,7 +91,7 @@ def events_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_dau_wau",
     oracle=f"""
     WITH ud AS (
-      SELECT DISTINCT user_id, {_DAY_SQL} AS day FROM events
+      SELECT DISTINCT user_id, {DAY_SQL} AS day FROM events
       WHERE user_id IS NOT NULL
     ), span AS (
       SELECT MIN(day) AS dmin, MAX(day) AS dmax FROM ud
@@ -195,7 +188,7 @@ _FILTER_SQL = f"""
     SELECT event_type,
            CAST(COUNT(*) AS BIGINT) AS n_all,
            CAST(COUNT(*) FILTER (WHERE value >= 100) AS BIGINT) AS n_big,
-           CAST(SUM({_CENTS_SQL}) FILTER (WHERE value >= 100) AS BIGINT)
+           CAST(SUM({cents_sql("value")}) FILTER (WHERE value >= 100) AS BIGINT)
              AS cents_big,
            CAST(COUNT(DISTINCT user_id) FILTER (WHERE value >= 100)
                 AS BIGINT) AS users_big
@@ -225,7 +218,7 @@ def agg_filter_clause_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
 _NAMED_WIN_SQL = f"""
     SELECT event_id, user_id,
            CAST(ROW_NUMBER() OVER w AS BIGINT) AS rn,
-           CAST(SUM({_CENTS_SQL}) OVER wf AS BIGINT) AS running_cents,
+           CAST(SUM({cents_sql("value")}) OVER wf AS BIGINT) AS running_cents,
            LAG(event_type) OVER w AS prev_type
     FROM events
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id),
@@ -262,7 +255,7 @@ def sql_named_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     "agg_geomean",
     oracle=f"""
     WITH c AS (
-      SELECT event_type, {_CENTS_SQL} AS c FROM events
+      SELECT event_type, {cents_sql("value")} AS c FROM events
       WHERE value > 0
     )
     SELECT event_type,
@@ -286,7 +279,7 @@ def agg_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
     property in tests.
     """
     e = load(spark, sf_dir, "events")
-    c = e.filter(F.col("value") > 0).select("event_type", _cents().alias("c"))
+    c = e.filter(F.col("value") > 0).select("event_type", cents_col(F.col("value")).alias("c"))
     return c.groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("n"),
         pround(F.exp(F.avg(F.log("c"))), 2).alias("geomean_cents"),

@@ -18,17 +18,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from engine.det import pround
+from engine.det import DAY_SQL, cents_col, cents_sql, pround
 from engine.registry import query
 from engine.session import load
 
-
-def _cents(col: str = "value") -> F.Column:
-    return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("bigint")
-
-
-_CENTS_SQL = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
-_DAY_SQL = "CAST(FLOOR(epoch(ts) / 86400) AS BIGINT)"
 
 WILSON_Z = 1.96
 WILSON_THRESHOLD = 0.15
@@ -46,7 +39,7 @@ KS_SOURCE_B = "src1"
     "events_wilson_alert",
     oracle=f"""
     WITH d AS (
-      SELECT {_DAY_SQL} AS day,
+      SELECT {DAY_SQL} AS day,
              CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
                   AS BIGINT) AS k
@@ -178,7 +171,7 @@ def llm_curriculum_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     "win_quantile_normalize",
     oracle=f"""
     WITH c AS (
-      SELECT event_id, event_type, {_CENTS_SQL} AS cents FROM events
+      SELECT event_id, event_type, {cents_sql("value")} AS cents FROM events
     ), r AS (
       SELECT event_id, event_type, cents,
              CAST(ROW_NUMBER() OVER (PARTITION BY event_type
@@ -217,7 +210,7 @@ def win_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape; the 100 TB form samples the global reference distribution.
     """
     e = load(spark, sf_dir, "events")
-    c = e.select("event_id", "event_type", _cents().alias("cents"))
+    c = e.select("event_id", "event_type", cents_col(F.col("value")).alias("cents"))
     return quantile_normalize_core(c)
 
 

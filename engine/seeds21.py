@@ -18,7 +18,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from engine.det import pround
 from engine.registry import query
 from engine.session import broadcast_if_fits, load
 

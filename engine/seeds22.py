@@ -20,7 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from engine.det import pround
 from engine.registry import ORACLES, query
 
 EVAL_CAP = 1000  # the llm_jaccard_neardup witness population

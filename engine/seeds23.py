@@ -20,14 +20,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from engine.det import pround
+from engine.det import DAY_SQL, cents_sql, pround
 from engine.registry import ORACLES, query
 from engine.session import load
 
 SH_EVAL_CAP = 1000  # the exact-Jaccard witness population
-
-_CENTS_SQL = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
-_DAY_SQL = "CAST(FLOOR(epoch(ts) / 86400) AS BIGINT)"
 
 
 # ---------------------------------------------------------------------------
@@ -124,8 +121,8 @@ def llm_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_naive_forecast_eval",
     oracle=f"""
     WITH d AS (
-      SELECT event_type, {_DAY_SQL} AS day,
-             CAST(SUM({_CENTS_SQL}) AS BIGINT) AS v
+      SELECT event_type, {DAY_SQL} AS day,
+             CAST(SUM({cents_sql("value")}) AS BIGINT) AS v
       FROM events GROUP BY 1, 2
     ), l AS (
       SELECT event_type, day, v,

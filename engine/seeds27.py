@@ -16,12 +16,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from engine.det import pround
+from engine.det import DAY_SQL, cents_sql, pround
 from engine.registry import query
 from engine.session import load
 
-_CENTS_SQL = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
-_DAY_SQL = "CAST(FLOOR(epoch(ts) / 86400) AS BIGINT)"
 
 RZ_WINDOW = 7  # trailing days (excluding the current one)
 RZ_THRESHOLD = 2.0
@@ -36,8 +34,8 @@ RZ_THRESHOLD = 2.0
     "ts_rolling_zscore",
     oracle=f"""
     WITH d AS (
-      SELECT event_type, {_DAY_SQL} AS day,
-             CAST(SUM({_CENTS_SQL}) AS BIGINT) AS v
+      SELECT event_type, {DAY_SQL} AS day,
+             CAST(SUM({cents_sql("value")}) AS BIGINT) AS v
       FROM events GROUP BY 1, 2
     ), m AS (
       SELECT event_type, day, v,

@@ -13,10 +13,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from engine.det import cents_col, cents_sql, exact_avg, exact_avg_sql, exact_sum, exact_sum_sql, pround
+from engine.det import cents_col, cents_sql, exact_sum, exact_sum_sql, pround
 from engine.registry import query
 from engine.session import load
-from engine.vec import _dot, _sq_norm, cosine
+from engine.vec import cosine
 
 NTILE_BUCKETS = 4
 RFM_R_DAYS = (1, 3)  # recency <= d3 -> 3, <= d2 -> 2, else 1
@@ -600,9 +600,9 @@ def llm_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTE-for-CTE in the oracle — then connected components to a true
     fixpoint), then a cluster-sized aggregate joined back to the
     survivors' metadata — the join is on the canonical id, so its
-    input is clusters, not the corpus. The labeling is shared with
-    llm_dedup_clusters through the process-local dedup_labels memo
-    (same threshold, same graph — VERDICT r5 item 6).
+    input is clusters, not the corpus. The labeling is
+    llm_dedup_clusters' own (engine.pipeline_ops.dedup_labels: same
+    threshold, same graph), computed afresh by each query.
     """
     from engine.pipeline_ops import dedup_labels
 

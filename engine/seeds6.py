@@ -29,11 +29,11 @@ modules import) — the pattern proven by seeds5 in round 5.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from engine.det import cents_col, cents_sql, exact_avg, exact_avg_sql, exact_sum, exact_sum_sql, pround
+from engine.det import cents_col, exact_avg, pround
 from engine.registry import query
 from engine.session import load
 from engine.splits import SPLIT_CASE_SQL, split_col
@@ -743,13 +743,9 @@ def llm_decontaminate_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         _minhash_sig,
         band_rows,
         first_collision_guard,
+        verify_candidates,
     )
-    from engine.llm_ops import (
-        bitset_intersection,
-        nondet_zero,
-        packed_token_sets,
-        token_arrays,
-    )
+    from engine.llm_ops import token_arrays
 
     d = load(spark, sf_dir, "documents")
     # Doc-grain ARRAY checkpoint instead of exploded occurrence rows
@@ -785,62 +781,17 @@ def llm_decontaminate_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.col("abv_t")[i] for i in range(N_BANDS)],
         [F.col("abv_e")[i] for i in range(N_BANDS)],
     )
-    obs = Observation()
     cand = (
         tr.join(F.broadcast(ev), ["band", "bv", "lang"])
         .filter(no_earlier_collision)
         .select("doc_t", "doc_e")
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+    )
+    flagged = (
+        verify_candidates(cand, arrs, "doc_t", "doc_e", DECON_THRESHOLD)
+        .select("doc_t")
+        .distinct()
     )
     tr_docs = d.filter(split == "train")
-    if obs.get["n"] == 0:
-        flagged = spark.createDataFrame([], "doc_t long")
-    else:
-        cand_ids = (
-            cand.select(F.col("doc_t").alias("doc_id"))
-            .unionByName(cand.select(F.col("doc_e").alias("doc_id")))
-            .distinct()
-        )
-        packed, n_words = packed_token_sets(
-            arrs.join(cand_ids, "doc_id", "left_semi").select(
-                "doc_id", "lang", F.explode("toks").alias("token")
-            )
-        )
-        packed = packed.localCheckpoint(eager=True)
-        pa = packed.select(
-            F.col("doc_id").alias("doc_t"),
-            F.col("mask").alias("ma"),
-            F.col("n_tok").alias("na"),
-        )
-        pb = packed.select(
-            F.col("doc_id").alias("doc_e"),
-            F.col("mask").alias("mb"),
-            F.col("n_tok").alias("nb"),
-        )
-        jac = F.col("n_common").cast("double") / (
-            F.col("na") + F.col("nb") - F.col("n_common")
-        )
-        # Size-ratio prune before the popcount (r14, same as the
-        # lsh_core verify): J ≥ t ⟹ the set sizes agree within factor
-        # t — exact implication, so no qualifying pair is pruned.
-        flagged = (
-            cand.join(F.broadcast(pa), "doc_t")
-            .join(F.broadcast(pb), "doc_e")
-            .filter(
-                # −1 slack (r15): covers double rounding at the
-                # na/nb = t boundary — see llm_ops.exact_jaccard_pairs.
-                (F.col("na") * DECON_THRESHOLD - 1 <= F.col("nb"))
-                & (F.col("nb") * DECON_THRESHOLD - 1 <= F.col("na"))
-            )
-            .withColumn(
-                "n_common",
-                bitset_intersection("ma", "mb", n_words) + nondet_zero(),
-            )
-            .filter(jac >= DECON_THRESHOLD)
-            .select("doc_t")
-            .distinct()
-        )
     return (
         tr_docs.join(
             flagged, tr_docs["doc_id"] == flagged["doc_t"], "left"

@@ -34,18 +34,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from engine.det import pround
+from engine.det import cents_col, cents_sql, pround
 from engine.registry import query
 from engine.session import load
 
 # value is 2-dp by fixture construction: cents = floor(100·v + 0.5) are
-# exact longs (the win_pareto_days-proven derivation — engine/seeds7.py).
-def _cents(col: str = "value") -> F.Column:
-    return F.floor(F.col(col) * 100 + F.lit(0.5)).cast("bigint")
-
-
-_CENTS_SQL = "CAST(FLOOR(value * 100 + 0.5) AS BIGINT)"
-
+# exact longs (det.cents_col; the win_pareto_days-proven derivation —
+# engine/seeds7.py).
 AB_PAIR = ("click", "view")  # unused: all unordered pairs are emitted
 MAD_K = 4.4478  # 3 × 1.4826 (normal-consistency), one literal both engines
 EWMA_LAGS = 8  # trailing window; α = 1/2 ⇒ weights 2^-k are EXACT doubles
@@ -218,7 +213,7 @@ def fn_map_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH d AS (
       SELECT user_id,
              CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS day,
-             (MAX({{'ts': ts, 'id': event_id, 'c': {_CENTS_SQL}}})).c
+             (MAX({{'ts': ts, 'id': event_id, 'c': {cents_sql("value")}}})).c
                AS close_c
       FROM events
       WHERE user_id IS NOT NULL
@@ -296,7 +291,7 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select(
             "user_id",
             F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day"),
-            _cents().alias("c"),
+            cents_col(F.col("value")).alias("c"),
             "ts",
             "event_id",
         )
@@ -363,8 +358,8 @@ def interpolate_core(d: DataFrame) -> DataFrame:
     WITH s AS (
       SELECT event_type,
              CAST(COUNT(*) AS BIGINT) AS n,
-             CAST(SUM({_CENTS_SQL}) AS BIGINT) AS s1,
-             CAST(SUM({_CENTS_SQL} * {_CENTS_SQL}) AS BIGINT) AS s2
+             CAST(SUM({cents_sql("value")}) AS BIGINT) AS s1,
+             CAST(SUM({cents_sql("value")} * {cents_sql("value")}) AS BIGINT) AS s2
       FROM events GROUP BY 1
     ), st AS (
       SELECT event_type, n,
@@ -402,7 +397,7 @@ def events_ab_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture SFs stay well inside bigint.
     """
     e = load(spark, sf_dir, "events")
-    c = _cents()
+    c = cents_col(F.col("value"))
     s = e.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.sum(c).alias("s1"),
@@ -462,7 +457,7 @@ def events_ab_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_anomaly_mad",
     oracle=f"""
     WITH c AS (
-      SELECT event_type, {_CENTS_SQL} AS c FROM events
+      SELECT event_type, {cents_sql("value")} AS c FROM events
     ), med AS (
       SELECT event_type, QUANTILE_CONT(c, 0.5) AS med_c FROM c GROUP BY 1
     ), dev AS (
@@ -498,7 +493,7 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     (agg_percentile_drift audits exactly that substitution).
     """
     e = load(spark, sf_dir, "events")
-    c = e.select("event_type", _cents().alias("c"))
+    c = e.select("event_type", cents_col(F.col("value")).alias("c"))
     med = c.groupBy("event_type").agg(
         F.percentile("c", F.lit(0.5)).alias("med_c")
     )
@@ -625,7 +620,7 @@ _EWMA_NUM, _EWMA_DEN = _ewma_terms_sql()
     WITH d AS (
       SELECT user_id,
              CAST(FLOOR(epoch(ts) / 86400) AS BIGINT) AS day,
-             (MAX({{'ts': ts, 'id': event_id, 'c': {_CENTS_SQL}}})).c
+             (MAX({{'ts': ts, 'id': event_id, 'c': {cents_sql("value")}}})).c
                AS close_c
       FROM events GROUP BY 1, 2
     )
@@ -657,7 +652,7 @@ def ts_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select(
             "user_id",
             F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day"),
-            _cents().alias("c"),
+            cents_col(F.col("value")).alias("c"),
             "ts",
             "event_id",
         )
@@ -935,7 +930,7 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def checksum(df: DataFrame):
             r = df.agg(
-                F.count("*").alias("n"), F.sum(_cents()).alias("s")
+                F.count("*").alias("n"), F.sum(cents_col(F.col("value"))).alias("s")
             ).collect()[0]
             return r["n"], r["s"]
 
@@ -1126,7 +1121,7 @@ def llm_chat_template(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT user_id,
            CAST(COUNT(*) AS BIGINT) AS n_events,
-           CAST(SUM({_CENTS_SQL}) AS BIGINT) AS sum_cents
+           CAST(SUM({cents_sql("value")}) AS BIGINT) AS sum_cents
     FROM events GROUP BY 1
     """,
 )
@@ -1144,7 +1139,7 @@ def stream_tws_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events")
     return e.groupBy("user_id").agg(
         F.count("*").cast("bigint").alias("n_events"),
-        F.sum(_cents()).cast("bigint").alias("sum_cents"),
+        F.sum(cents_col(F.col("value"))).cast("bigint").alias("sum_cents"),
     )
 
 
@@ -1183,7 +1178,7 @@ def tws_counter_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = events_stream(spark, sf_dir).select(
-        "user_id", _cents().alias("c")
+        "user_id", cents_col(F.col("value")).alias("c")
     )
 
     class Counter(StatefulProcessor):

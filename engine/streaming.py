@@ -22,7 +22,7 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from engine.det import cents_col, cents_sql, exact_avg, exact_avg_sql, exact_sum, exact_sum_sql, pround
+from engine.det import cents_col, exact_sum
 from engine.registry import query
 from engine.session import load
 # Re-exported for compatibility: the stream source lives in the leaf

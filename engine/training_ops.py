@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from engine.det import pround
+from engine.det import cents_col, pround, revenue_e4_col
 from engine.registry import query
 from engine.session import load
 
@@ -529,15 +529,14 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load(spark, sf_dir, "nation")
     p = load(spark, sf_dir, "part").filter(F.col("p_name").like("%bolt%"))
 
-    def _cents100(c: str) -> F.Column:
-        return F.floor(F.col(c) * 100 + F.lit(0.5)).cast("bigint")
-
     # exact 1e-4-unit integer profit; DECIMAL(38,0) sum headroom:
     # ~1e9 units/row × 1e12 rows at 100 TB ≈ 1e21, far under 1e38
     # (a BIGINT sum would overflow at that scale).
     profit_e4 = (
-        _cents100("l_extendedprice") * (100 - _cents100("l_discount"))
-        - _cents100("p_retailprice") * F.col("l_quantity").cast("bigint") * 10
+        revenue_e4_col()
+        - cents_col(F.col("p_retailprice"))
+        * F.col("l_quantity").cast("bigint")
+        * 10
     ).cast("decimal(38,0)")
     return (
         l.join(F.broadcast(p), l["l_partkey"] == p["p_partkey"])

@@ -25,38 +25,39 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
 import engine  # noqa: E402
-import engine.pipeline_ops as po  # noqa: E402
 import engine.scale_ops as so  # noqa: E402
+import engine.session as ss  # noqa: E402
 
 
 def test_reset_process_memos_clears_both_caches():
-    """Both registered process-local memos (the CC-labels memo behind
-    llm_dedup_clusters/llm_dedup_survivors and the driver-side corpus
-    cache twin) empty out on reset — a future rename of either dict
-    breaks the import here, loudly."""
-    po._LABELS_MEMO[("app", "sf")] = object()
+    """Both registered process-local memos (the driver-side corpus
+    cache twin and the session schema catalog) empty out on reset — a
+    future rename of either dict breaks the import here, loudly."""
     so._NEARDUP_CORPUS[("p", 0, 0)] = object()
+    ss._SCHEMA_CATALOG[("app", "sf", 0, 0)] = object()
     bench.reset_process_memos()
-    assert not po._LABELS_MEMO
     assert not so._NEARDUP_CORPUS
+    assert not ss._SCHEMA_CATALOG
 
 
 def test_run_passes_pays_cold_memo_cost_every_rep(monkeypatch):
     """VERDICT r12 item 1 'Done' bar: under REPS=3 a memoized query must
     run COLD in every rep (the reset wired into the pass loop clears the
-    real _LABELS_MEMO), so the reported median can never book a
-    cache-hit time a single-rep driver artifact can't reproduce."""
+    real memos), so the reported median can never book a cache-hit time
+    a single-rep driver artifact can't reproduce."""
     observed: list[str] = []
 
     def memoized_query(spark, sf_dir):
-        observed.append("warm" if po._LABELS_MEMO else "cold")
-        po._LABELS_MEMO[("app", sf_dir)] = object()
+        warm = so._NEARDUP_CORPUS or ss._SCHEMA_CATALOG
+        observed.append("warm" if warm else "cold")
+        so._NEARDUP_CORPUS[("p", 0, 0)] = object()
+        ss._SCHEMA_CATALOG[("app", sf_dir, 0, 0)] = object()
         return None
 
     monkeypatch.setattr(bench, "force", lambda df: None)
     qid = "__bench_test_memoized__"
     monkeypatch.setitem(engine.QUERIES, qid, memoized_query)
-    po._LABELS_MEMO.clear()
+    bench.reset_process_memos()
     samples = bench.run_passes(None, "sfX", [qid], 3)
     assert observed == ["cold", "cold", "cold"], (
         "a rep ran memo-warm — the close median and the driver's "
@@ -64,7 +65,7 @@ def test_run_passes_pays_cold_memo_cost_every_rep(monkeypatch):
         "24 s llm_dedup_clusters regression)"
     )
     assert len(samples[qid]) == 3
-    po._LABELS_MEMO.clear()
+    bench.reset_process_memos()
 
 
 def test_quiet_gate_rejects_momentary_one_minute_dip():

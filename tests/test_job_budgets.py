@@ -33,8 +33,7 @@ Measured at sf0.001 (warm catalog, shuffle_partitions=8):
     candidate ids came from two scans; 44 with the frontier and
     path-halving joins broadcast from observed row counts
     (engine.session.broadcast_if_fits), one verify pass and one scan.
-    Budget 44. The CC-labels memo is emptied for the count, so it is
-    the cold cost.
+    Budget 44.
   * ``emb_banded_recall`` (8): pinned at its count from before the
     banded self-join was shared, so a census or collect job cannot
     creep into a not-tripped path.
@@ -52,7 +51,6 @@ import pytest
 import engine
 from engine.llm_ops import packed_token_sets, token_arrays
 import engine.lsh_core as lc
-import engine.pipeline_ops
 from engine.lsh_core import lsh_neardup_pairs
 from engine.session import broadcast_if_fits, load
 from tests.conftest import SF_DIR
@@ -76,11 +74,10 @@ def _build_jobs(spark, build) -> int:
 
 
 @pytest.mark.parametrize("qid", sorted(BUDGETS))
-def test_build_job_budget(spark, qid, monkeypatch):
+def test_build_job_budget(spark, qid):
     budget, tables = BUDGETS[qid]
     for t in tables:
         load(spark, SF_DIR, t)
-    monkeypatch.setattr(engine.pipeline_ops, "_LABELS_MEMO", {})
     jobs = _build_jobs(spark, lambda: engine.QUERIES[qid](spark, SF_DIR))
     assert jobs <= budget, f"{qid}: {jobs} build jobs > budget {budget}"
 
@@ -104,16 +101,14 @@ def test_broadcast_if_fits_sizes_from_observed_rows(spark):
         spark.conf.unset(BC_KEY)
 
 
-def test_outputs_identical_without_broadcast(spark, monkeypatch):
+def test_outputs_identical_without_broadcast(spark):
     """The observed-count broadcasts pick a join strategy, never a
     result: with broadcasting off (threshold −1, the plan a graph too
     large to broadcast gets) both iterative queries return the same
     rows."""
-    monkeypatch.setattr(engine.pipeline_ops, "_LABELS_MEMO", {})
     qids = ("graph_pagerank_integer", "llm_dedup_clusters")
 
     def run():
-        engine.pipeline_ops._LABELS_MEMO.clear()
         return {
             q: sorted(engine.QUERIES[q](spark, SF_DIR).collect()) for q in qids
         }

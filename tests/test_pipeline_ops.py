@@ -113,42 +113,43 @@ def test_audio_features_match_python_recomputation(spark):
         assert abs(float(r["rms"]) - rms) < 1e-12
 
 
-def test_dedup_labels_memo_is_keyed_and_consistent(spark):
-    """The process-local labels memo (VERDICT r5 item 6) must (a) hit on
-    a second call for the same (application, sf_dir) — identity, not
-    recompute — (b) key on sf_dir so different fixture dirs can never
-    share a labeling, and (c) produce the SAME labeling either way (the
-    memo is pure reuse, not a semantic fork)."""
-    from engine.pipeline_ops import (
-        _LABELS_MEMO,
-        _neardup_edges,
-        connected_components,
-        dedup_labels,
-    )
-    from pyspark.sql import functions as F
+def test_dedup_clusters_see_inplace_documents_rewrite(spark, tmp_path):
+    """Component labels are a function of the table contents, not of
+    what ran earlier in the session: after ``documents.parquet`` is
+    rewritten in place so two docs from different clusters become
+    byte-identical (Jaccard 1.0), a rerun in the same session must put
+    them in one cluster."""
+    import os
+    import shutil
 
-    app = spark.sparkContext.applicationId
-    _LABELS_MEMO.pop((app, SF_DIR), None)
-    first = dedup_labels(spark, SF_DIR)
-    assert dedup_labels(spark, SF_DIR) is first  # (a) memo hit
-    assert (app, SF_DIR) in _LABELS_MEMO  # (b) keyed by (app, sf_dir)
-    # (c) memoized labeling == a fresh un-memoized recomputation
-    d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    fresh = connected_components(
-        d.select(F.col("doc_id").alias("u")),
-        _neardup_edges(spark, SF_DIR),
-    )
-    assert (
-        first.withColumnRenamed("label", "l1")
-        .join(fresh.withColumnRenamed("label", "l2"), "u", "full")
-        .filter(
-            F.col("l1").isNull()
-            | F.col("l2").isNull()
-            | (F.col("l1") != F.col("l2"))
-        )
-        .count()
-        == 0
-    )
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    for name in os.listdir(SF_DIR):
+        shutil.copyfile(f"{SF_DIR}/{name}", tmp_path / name)
+    path = str(tmp_path / "documents.parquet")
+
+    def clusters() -> dict[int, int]:
+        return {
+            r["doc_id"]: r["cluster_id"]
+            for r in QUERIES["llm_dedup_clusters"](spark, str(tmp_path))
+            .collect()
+        }
+
+    before = clusters()
+    t = pq.read_table(path)
+    lang = t.column("lang")[0].as_py()
+    same_lang = t.filter(pc.equal(t["lang"], lang))
+    ids = same_lang.column("doc_id").to_pylist()
+    a = ids[0]
+    b = next(i for i in ids if before[i] != before[a])
+    text_a = same_lang.column("text")[0].as_py()
+    text = pc.if_else(pc.equal(t["doc_id"], b), text_a, t["text"])
+    i_text = t.schema.get_field_index("text")
+    pq.write_table(t.set_column(i_text, "text", text), path)
+
+    after = clusters()
+    assert after[a] == after[b], "stale labels served after the rewrite"
 
 
 def test_char_shingles_chunking_matches_python_sliding_window(spark):

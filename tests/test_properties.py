@@ -572,7 +572,26 @@ def test_neardup_corpus_dir_key_sees_nested_part_rewrite(tmp_path):
     )
 
 
-def test_size_prune_keeps_exact_boundary_pair(spark):
+def _all_pairs(spark, docs, t):
+    from engine.llm_ops import exact_jaccard_pairs
+
+    return exact_jaccard_pairs(docs, threshold=t)
+
+
+def _candidate_pair(spark, docs, t):
+    from engine.llm_ops import token_arrays
+    from engine.lsh_core import verify_candidates
+
+    cand = spark.createDataFrame([(0, 2)], "doc_a long, doc_b long")
+    return verify_candidates(cand, token_arrays(docs), "doc_a", "doc_b", t)
+
+
+@pytest.mark.parametrize(
+    "verify",
+    [_all_pairs, _candidate_pair],
+    ids=["exact_jaccard_pairs", "verify_candidates"],
+)
+def test_size_prune_keeps_exact_boundary_pair(spark, verify):
     """r15 (VERDICT r14 item 9): a pair at J EXACTLY = t whose sizes sit
     exactly at the prune boundary (nb/na = t) must survive the size
     prune. The prune implication J ≥ t ⟹ t·na ≤ nb is exact in real
@@ -583,9 +602,9 @@ def test_size_prune_keeps_exact_boundary_pair(spark):
     0.7/0.8 the rounding happens to be benign for every na ≤ 5000 —
     checked exhaustively — so this pins the generic helper at a
     threshold where the failure is real, as insurance for any future
-    threshold.)"""
-    from engine.llm_ops import exact_jaccard_pairs
-
+    threshold.) Both entry points of the shared verify are pinned: the
+    all-pairs witness and the banded candidate path, fed the candidate
+    frame [(0, 2)]."""
     t = 9 / 14
     assert 42 * t > 27, "test premise: the unslacked product rounds up"
     toks = [f"w{i}" for i in range(42)]
@@ -599,7 +618,7 @@ def test_size_prune_keeps_exact_boundary_pair(spark):
     )
     got = {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in exact_jaccard_pairs(docs, threshold=t).collect()
+        for r in verify(spark, docs, t).collect()
     }
     # J(A,B) = 27/42 = 9/14 exactly = t: the pair must be in the
     # output (pround(·, 4) of 0.642857... = 0.6429).
